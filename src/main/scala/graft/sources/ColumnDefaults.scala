@@ -26,6 +26,7 @@ import org.apache.spark.sql.types._
   * string, date, timestamp — the primitive single-value encodings both
   * specs define and a SQL literal can spell exactly. */
 object ColumnDefaults {
+  import TableCommit.jstr
 
   /** the Spark SQL literal for `v` as type `dt` — rendered with
     * explicit casts where bare literals would parse to another type
@@ -82,12 +83,4 @@ object ColumnDefaults {
       Some(s"TIMESTAMP '${node.asText().replace("T", " ")}'")
     case _ => scala.None
   }
-
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 }

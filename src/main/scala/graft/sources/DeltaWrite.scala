@@ -31,6 +31,7 @@ import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
   * writer pays.
   */
 object DeltaWrite {
+  import TableCommit.{jstr, Staged}
 
   /** Create a new Delta table at `tablePath` (commit 0). Fails if a
     * Delta log already exists there.
@@ -655,15 +656,15 @@ object DeltaWrite {
       schema: StructType, partCols: Seq[String],
       changes: DataFrame): Seq[String] = {
     import org.apache.spark.sql.functions.col
-    val staged = writeStaged(fs, root, destPrefix = "_change_data") { staging =>
+    val staged = TableCommit.stage(fs, root, destPrefix = "_change_data") { staging =>
       val ordered = changes.select(
         (schema.fieldNames.map(col) :+ col("_change_type")).toSeq: _*)
       val clustered = WriteLayout.clusterByPartitions(spark, ordered, partCols)
       val w = clustered.write.mode("append")
       (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(staging)
     }
-    staged.map { case (rel, size) =>
-      s"""{"cdc":{"path":${jstr(encodePath(rel))},"partitionValues":{${partitionValuesJson(rel)}},"size":$size,"dataChange":false}}"""
+    staged.map { f =>
+      s"""{"cdc":{"path":${jstr(encodePath(f.rel))},"partitionValues":{${partitionValuesJson(f.rel)}},"size":${f.size},"dataChange":false}}"""
     }
   }
 
@@ -1428,22 +1429,13 @@ object DeltaWrite {
     * `maxRetries` losses signals real contention and surfaces the
     * ConcurrentModificationException to the caller). The parquet data
     * files of a lost round are already in the table directory but
-    * unreferenced until a commit names them — the retry re-reads the
-    * directory listing, so each round writes fresh files and the lost
-    * ones are vacuum fodder, never data corruption. */
+    * unreferenced until a commit names them — each round stages fresh
+    * files ([[TableCommit.stage]]), and the lost ones are vacuum
+    * fodder, never data corruption. */
   def appendWithRetry(spark: SparkSession, df: DataFrame, tablePath: String,
-      partitionBy: Seq[String] = Nil, maxRetries: Int = 5): Unit = {
-    require(maxRetries >= 0, s"maxRetries must be >= 0, got $maxRetries")
-    var attempt = 0
-    while (true) {
-      try { append(spark, df, tablePath, partitionBy); return }
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
-    }
-  }
+      partitionBy: Seq[String] = Nil,
+      maxRetries: Int = TableCommit.MaxCommitRetries): Unit =
+    TableCommit.retry(maxRetries)(append(spark, df, tablePath, partitionBy))
 
   /** test seam for the conditional-commit guard: commit at an explicit
     * log version — what a racing writer with a stale view of the log
@@ -1497,39 +1489,20 @@ object DeltaWrite {
             partitionBy.map(p => DeltaScan.physicalName(declared(p))))
       }
     }
-    // STAGE-then-MOVE: the add list is EXACTLY the files this writer
-    // moved (see writeStaged) — never a directory-listing diff that
-    // could cross-claim a concurrent writer's in-flight files.
     // Partitioned writes CLUSTER by the partition columns first: one
     // hash shuffle puts each partition tuple in exactly one task, so
     // files = touched partitions instead of tasks x partitions (the
     // small-file explosion measured at sf1 on the generated layout).
-    val added = writeStaged(fs, root, destPrefix = "") { staging =>
+    val added = TableCommit.stage(fs, root, destPrefix = "") { staging =>
       val clustered = WriteLayout.clusterByPartitions(spark, wdf, wparts)
       val writer = clustered.write.mode("append")
       (if (wparts.nonEmpty) writer.partitionBy(wparts: _*) else writer)
         .parquet(staging)
     }
-    require(added.nonEmpty, "write produced no data files (empty input?)")
+    // an input with no rows stages no file: the commit still lands
+    // (schema, txn marker), adding no data
 
     val now = System.currentTimeMillis()
-    val conf = spark.sparkContext.hadoopConfiguration
-    // footer stats read in bounded parallel — a partitioned write can
-    // emit thousands of files and a sequential footer walk is a
-    // single-core commit bottleneck (16 concurrent metadata reads)
-    val adds = parMetaMap(added) { case (rel, size) =>
-      // partition values from the hive path segments col=value
-      val pv = rel.split('/').dropRight(1).collect {
-        case seg if seg.contains('=') =>
-          val Array(k, v) = seg.split("=", 2)
-          s"${jstr(k)}:${jstr(hiveUnescape(v))}"
-      }.mkString(",")
-      // per-file stats from the parquet FOOTER (metadata-only read) —
-      // the data-skipping index DeltaScan prunes with
-      val stats = ParquetStats.statsJson(conf, new Path(root, rel))
-        .map(s => s""","stats":${jstr(s)}""").getOrElse("")
-      s"""{"add":{"path":${jstr(encodePath(rel))},"partitionValues":{$pv},"size":$size,"modificationTime":$now,"dataChange":true$stats}}"""
-    }
     val header =
       if (version == 0L) {
         val schemaJson = df.schema.json // already a JSON document
@@ -1553,29 +1526,12 @@ object DeltaWrite {
             s""""schemaString":${jstr(schemaJson)},""" +
             s""""partitionColumns":[$pcols],"configuration":{$cfg},"createdTime":$now}}""")
       } else metaOverride.toSeq // an evolved-schema commit re-declares metaData
-    val logDir = new Path(root, "_delta_log")
-    fs.mkdirs(logDir)
-    val commitFile = new Path(logDir, f"$version%020d.json")
     val txnLines = txn.toSeq.map { case (app, v) =>
       s"""{"txn":{"appId":${jstr(app)},"version":$v,"lastUpdated":$now}}"""
     }
-    val ci = s"""{"commitInfo":{"timestamp":$now,"operation":${jstr(
-      if (version == 0L) "CREATE TABLE AS SELECT" else "WRITE")}}}"""
-    // conditional commit via content-atomic rename ([[AtomicFiles]]):
-    // of two writers racing to the same log version the second fails
-    // loudly here, and a concurrent reader can never observe a torn
-    // commit file. Row-tracked tables stamp baseRowIds first.
-    val lines = stampRowTracking(fs, root, version, header ++ txnLines ++ adds)
-    try AtomicFiles.publishUtf8(fs, commitFile,
-      (ci +: lines).mkString("", "\n", "\n"),
-      overwrite = false)
-    catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent Delta commit detected: $commitFile already exists — " +
-            "another writer committed this version; re-read the table and retry", e)
-    }
-    maybeAutoCheckpoint(spark, fs, root, version)
+    writeCommitFile(fs, root, version,
+      header ++ txnLines ++ stagedAddLines(added, dataChange = true),
+      operation = Some(if (version == 0L) "CREATE TABLE AS SELECT" else "WRITE"))
   }
 
   /** full-history replay → per path: (latest action is add?, version,
@@ -1769,7 +1725,7 @@ object DeltaWrite {
         .drop("__file", "__idx", "__base", "__dcv")
     }
     val added = groups.toSeq.sortBy(_._1).flatMap { case (partDir, rels) =>
-      writeStaged(fs, root, destPrefix = partDir) { staging =>
+      TableCommit.stage(fs, root, destPrefix = partDir) { staging =>
         val paths = rels.map(r => new Path(root, r).toString)
         val src0 = spark.read.parquet(paths: _*)
         val src =
@@ -1797,15 +1753,11 @@ object DeltaWrite {
     require(added.nonEmpty, "compaction rewrite produced no files")
 
     val now = System.currentTimeMillis()
-    val conf = spark.sparkContext.hadoopConfiguration
     val actions =
-      added.map { case (rel, size) =>
-        val stats = ParquetStats.statsJson(conf, new Path(root, rel))
-          .map(s => s""","stats":${jstr(s)}""").getOrElse("")
-        s"""{"add":{"path":${jstr(encodePath(rel))},"partitionValues":{${partitionValuesJson(rel)}},"size":$size,"modificationTime":$now,"dataChange":false$stats}}"""
-      } ++ groups.values.flatten.toSeq.sorted.map { rel =>
-        s"""{"remove":{"path":${jstr(encodePath(rel))},"deletionTimestamp":$now,"dataChange":false}}"""
-      }
+      stagedAddLines(added, dataChange = false) ++
+        groups.values.flatten.toSeq.sorted.map { rel =>
+          s"""{"remove":{"path":${jstr(encodePath(rel))},"deletionTimestamp":$now,"dataChange":false}}"""
+        }
     // reads only the named small files — concurrent appends commute
     commitWithRetry(spark, fs, root, actions, Some("OPTIMIZE"),
       CommitScope("OPTIMIZE", readV, groups.values.flatten.toSet,
@@ -1955,14 +1907,14 @@ object DeltaWrite {
     * file whose every row died leaves an empty part), log adds with
     * footer stats + removes, one conditional commit */
   private def commitRewrite(spark: SparkSession, fs: FileSystem, root: Path,
-      added: Seq[(String, Long)], removedRels: Seq[String],
+      added: Seq[Staged], removedRels: Seq[String],
       txn: Option[(String, Long)] = None,
       operation: Option[String] = scala.None,
       scope: Option[CommitScope] = scala.None,
       extraActions: Seq[String] = Nil): Unit = {
     val now = System.currentTimeMillis()
     val actions =
-      stagedAddLines(spark, fs, root, added) ++ removedRels.map { rel =>
+      stagedAddLines(added, dataChange = true) ++ removedRels.map { rel =>
         s"""{"remove":{"path":${jstr(encodePath(rel))},"deletionTimestamp":$now,"dataChange":true}}"""
       } ++ extraActions
     val txnLines = txn.toSeq.map { case (app, tv) =>
@@ -1976,44 +1928,17 @@ object DeltaWrite {
     }
   }
 
-  /** add-action lines for freshly staged files: zero-row parts dropped
-    * (a victim file whose every row died leaves an empty part), footer
-    * stats attached — shared by [[commitRewrite]] and the DV DMLs */
-  private def stagedAddLines(spark: SparkSession, fs: FileSystem, root: Path,
-      added: Seq[(String, Long)]): Seq[String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val counted = parMetaMap(added) { case (rel, size) =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(root, rel), conf))
-      (rel, size, (try r.getRecordCount finally r.close()) > 0L)
-    }
-    val (kept, empty) = counted.partition(_._3)
-    empty.foreach { case (rel, _, _) => fs.delete(new Path(root, rel), false) }
+  /** add-action lines for freshly staged files, with the per-file
+    * stats (the data-skipping index [[DeltaScan]] prunes with) from the
+    * footer [[TableCommit.stage]] already read */
+  private def stagedAddLines(added: Seq[Staged], dataChange: Boolean): Seq[String] = {
     val now = System.currentTimeMillis()
-    parMetaMap(kept) { case (rel, size, _) =>
-      val stats = ParquetStats.statsJson(conf, new Path(root, rel))
+    added.map { f =>
+      val stats = ParquetStats.statsJson(f.footer)
         .map(s => s""","stats":${jstr(s)}""").getOrElse("")
-      s"""{"add":{"path":${jstr(encodePath(rel))},"partitionValues":{${partitionValuesJson(rel)}},"size":$size,"modificationTime":$now,"dataChange":true$stats}}"""
+      s"""{"add":{"path":${jstr(encodePath(f.rel))},"partitionValues":{${partitionValuesJson(f.rel)}},"size":${f.size},"modificationTime":$now,"dataChange":$dataChange$stats}}"""
     }
   }
-
-  /** bounded driver-side parallel map for per-file METADATA I/O
-    * (parquet footer reads) — a partitioned DML can touch thousands of
-    * files, and a sequential footer walk single-cores the commit.
-    * Order-preserving; exceptions propagate. */
-  private def parMetaMap[A, B](xs: Seq[A])(f: A => B): Seq[B] =
-    if (xs.lengthCompare(8) < 0) xs.map(f)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
-      try {
-        val futs = xs.map { x =>
-          pool.submit(new java.util.concurrent.Callable[B] { def call(): B = f(x) })
-        }
-        futs.map(_.get())
-      } catch {
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
-      } finally pool.shutdown()
-    }
 
   /** Row-level DELETE, copy-on-write: remove every current row
     * matching `cond` by rewriting ONLY the files that hold matching
@@ -2061,13 +1986,13 @@ object DeltaWrite {
           .filter(coalesce(cond, lit(false)))
           .select(schema.fieldNames.map(col).toSeq: _*)
           .withColumn("_change_type", lit("delete")))
-    // ONE staged write for every victim dir (writeStaged moves nested
-    // hive dirs): the former per-partition-directory loop launched one
+    // ONE staged write for every victim dir (TableCommit.stage moves
+    // nested hive dirs): the former per-partition-directory loop launched one
     // Spark job per touched directory — a delete spanning D dirs paid
     // D sequential job latencies; the dynamic partitionBy write is the
     // same single-job shape commit() and merge already use, and the
     // partition-column clustering keeps files = touched partitions
-    val added = writeStaged(fs, root, destPrefix = "") { staging =>
+    val added = TableCommit.stage(fs, root, destPrefix = "") { staging =>
       val survivors = liveScan(spark, root, schema, partCols, victims, mapped)
         .filter(keep)
       if (partCols.isEmpty)
@@ -2173,7 +2098,7 @@ object DeltaWrite {
       }
     // ONE staged write for every victim dir — same single-job dynamic
     // partitionBy shape as deleteWhere/merge (was a job per directory)
-    val added = writeStaged(fs, root, destPrefix = "") { staging =>
+    val added = TableCommit.stage(fs, root, destPrefix = "") { staging =>
       val updated = liveScan(spark, root, schema, partCols, victims, mapped)
         .select((projected ++ partCols.map(col)).toSeq: _*)
       if (partCols.isEmpty)
@@ -2438,7 +2363,7 @@ object DeltaWrite {
     val added = victimFiles.toSeq.sorted
       .groupBy(r => r.split('/').dropRight(1).mkString("/"))
       .toSeq.sortBy(_._1).flatMap { case (partDir, rels) =>
-        writeStaged(fs, root, destPrefix = partDir) { staging =>
+        TableCommit.stage(fs, root, destPrefix = partDir) { staging =>
           liveScan(spark, root, schema, partCols, rels, mapped)
             .filter(cond)
             .join(oldPosDf, Seq("__rel", "__pos"), "left_anti")
@@ -2448,7 +2373,7 @@ object DeltaWrite {
         }
       }
     commitWithRetry(spark, fs, root,
-      dvProtocolAction(proto) ++ dvAdds ++ stagedAddLines(spark, fs, root, added),
+      dvProtocolAction(proto) ++ dvAdds ++ stagedAddLines(added, dataChange = true),
       Some("UPDATE (DV)"),
       CommitScope("UPDATE (DV)", readV, victimFiles,
         readsWholeTable = false, pred = Some((schema, cond))))
@@ -2527,7 +2452,7 @@ object DeltaWrite {
         .select(toPhysical(schema, mapped, schema.fieldNames.toSeq): _*)
       val physParts = partCols.map(p =>
         if (mapped) DeltaScan.physicalName(schema(p)) else p)
-      val added = writeStaged(fs, root, destPrefix = "") { staging =>
+      val added = TableCommit.stage(fs, root, destPrefix = "") { staging =>
         // cluster by partition columns: files = touched partitions,
         // not tasks x partitions (see commit())
         val clustered = WriteLayout.clusterByPartitions(spark, newData, physParts)
@@ -2539,7 +2464,7 @@ object DeltaWrite {
         txn.toSeq.map { case (app, tv) =>
           s"""{"txn":{"appId":${jstr(app)},"version":$tv,"lastUpdated":${System.currentTimeMillis()}}}"""
         } ++ dvProtocolAction(proto) ++ dvAdds ++
-          stagedAddLines(spark, fs, root, added),
+          stagedAddLines(added, dataChange = true),
         Some("MERGE (DV)"),
         CommitScope("MERGE (DV)", readV, victimFiles,
           readsWholeTable = true, pred = scala.None))
@@ -2579,7 +2504,7 @@ object DeltaWrite {
     val dataCols = schema.fieldNames.filterNot(partCols.contains)
     val added = victims.groupBy(r => r.split('/').dropRight(1).mkString("/"))
       .toSeq.sortBy(_._1).flatMap { case (partDir, rels) =>
-        writeStaged(fs, root, destPrefix = partDir) { staging =>
+        TableCommit.stage(fs, root, destPrefix = partDir) { staging =>
           liveScan(spark, root, schema, partCols, rels, mapped)
             .join(oldPosDf, Seq("__rel", "__pos"), "left_anti")
             .select(toPhysical(schema, mapped, dataCols.toSeq): _*)
@@ -2587,20 +2512,9 @@ object DeltaWrite {
         }
       }
     // row-preserving swap: dataChange=false adds (no DV) + removes
-    val conf = spark.sparkContext.hadoopConfiguration
-    val (kept, empty) = added.partition { case (rel, _) =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(root, rel), conf))
-      (try r.getRecordCount finally r.close()) > 0L
-    }
-    empty.foreach { case (rel, _) => fs.delete(new Path(root, rel), false) }
     val now = System.currentTimeMillis()
     val actions =
-      kept.map { case (rel, size) =>
-        val stats = ParquetStats.statsJson(conf, new Path(root, rel))
-          .map(s => s""","stats":${jstr(s)}""").getOrElse("")
-        s"""{"add":{"path":${jstr(encodePath(rel))},"partitionValues":{${partitionValuesJson(rel)}},"size":$size,"modificationTime":$now,"dataChange":false$stats}}"""
-      } ++ victims.map { rel =>
+      stagedAddLines(added, dataChange = false) ++ victims.map { rel =>
         s"""{"remove":{"path":${jstr(encodePath(rel))},"deletionTimestamp":$now,"dataChange":false}}"""
       }
     // reads exactly the victim files — disjoint concurrent work commutes
@@ -2791,7 +2705,7 @@ object DeltaWrite {
             dels.foldLeft(matchedPre.unionByName(matchedPost).unionByName(ins))(
               _ unionByName _))
         }
-      val added = writeStaged(fs, root, destPrefix = "") { staging =>
+      val added = TableCommit.stage(fs, root, destPrefix = "") { staging =>
         // cluster by partition columns: files = touched partitions,
         // not tasks x partitions (see commit())
         val clustered = WriteLayout.clusterByPartitions(spark, newData, physParts)
@@ -2920,7 +2834,7 @@ object DeltaWrite {
     val z = graft.operators.ScaleOps.zorderValue(buckets, bitsPerCol)
 
     val added = groups.toSeq.sortBy(_._1).flatMap { case (partDir, rels) =>
-      writeStaged(fs, root, destPrefix = partDir) { staging =>
+      TableCommit.stage(fs, root, destPrefix = partDir) { staging =>
         spark.read.parquet(rels.map(r => new Path(root, r).toString): _*)
           .withColumn("__graft_z", z)
           .repartitionByRange(targetFiles, col("__graft_z"))
@@ -2932,13 +2846,8 @@ object DeltaWrite {
     require(added.nonEmpty, "z-order rewrite produced no files")
 
     val now = System.currentTimeMillis()
-    val conf = spark.sparkContext.hadoopConfiguration
     val actions =
-      added.map { case (rel, size) =>
-        val stats = ParquetStats.statsJson(conf, new Path(root, rel))
-          .map(s => s""","stats":${jstr(s)}""").getOrElse("")
-        s"""{"add":{"path":${jstr(encodePath(rel))},"partitionValues":{${partitionValuesJson(rel)}},"size":$size,"modificationTime":$now,"dataChange":false$stats}}"""
-      } ++ live.sorted.map { rel =>
+      stagedAddLines(added, dataChange = false) ++ live.sorted.map { rel =>
         s"""{"remove":{"path":${jstr(encodePath(rel))},"deletionTimestamp":$now,"dataChange":false}}"""
       }
     // rewrites exactly the live files it read — concurrent appends land
@@ -3023,18 +2932,7 @@ object DeltaWrite {
     val doomed = (removed ++ orphans).filterNot(liveSet.contains)
       .filterNot(isAbsolutePath)
     if (!dryRun) doomed.foreach(rel => fs.delete(new Path(root, rel), false))
-    // crashed writers leave .staging-* dirs behind; listDataFiles hides
-    // them (correctly — in-flight files must not be claimable), so
-    // vacuum is the only reclamation point: delete staging dirs whose
-    // mtime is past the retention window (a LIVE writer's staging dir
-    // is younger than any sane retainMs)
-    if (!dryRun && fs.exists(root)) {
-      fs.listStatus(root).foreach { st =>
-        if (st.isDirectory && st.getPath.getName.startsWith(".staging-") &&
-            st.getModificationTime <= cutoff)
-          fs.delete(st.getPath, true)
-      }
-    }
+    if (!dryRun) TableCommit.sweepStaleStaging(fs, root, cutoff)
     // deletion-vector bins: live = the descriptors on the CURRENT
     // latest adds; superseded DVs (each deleteWhereDV replaces a
     // file's descriptor) and crashed tasks' orphans reclaim past the
@@ -3077,8 +2975,6 @@ object DeltaWrite {
       touched: Set[String],
       readsWholeTable: Boolean,
       pred: Option[(StructType, org.apache.spark.sql.Column)])
-
-  private val MaxCommitRetries = 5
 
   /** OCC validation of the commits in `(fromExclusive, toInclusive]`
     * against a DML's read/write scope — the delta-spark conflict
@@ -3151,41 +3047,35 @@ object DeltaWrite {
     }
   }
 
-  /** conditional DML commit with OCC RETRY: validates EVERY commit
-    * that landed after the DML's read version (including ones that
-    * landed between planning and this call — the classic TOCTOU
-    * window), then commits at the next version; a lost CAS re-reads,
-    * re-validates just the new commits, and tries again, up to
-    * [[MaxCommitRetries]]. Commuting winners (appends the stats prove
-    * disjoint, compactions of untouched files, txn markers) never
-    * force a replan; conflicting ones abort loudly with the reason. */
   /** test seam: runs between a DML's planning and its first commit
     * attempt — the deterministic way to land a racing commit inside
     * the TOCTOU window the OCC validation closes */
   private[graft] var beforeDmlCommit: () => Unit = () => ()
 
+  /** conditional DML commit with OCC RETRY ([[TableCommit.retry]]):
+    * validates EVERY commit that landed after the DML's read version
+    * (including ones that landed between planning and this call — the
+    * classic TOCTOU window), then commits at the next version; a lost
+    * CAS re-reads, re-validates just the new commits, and tries again.
+    * Commuting winners (appends the stats prove disjoint, compactions
+    * of untouched files, txn markers) never force a replan; conflicting
+    * ones abort loudly with the reason. */
   private def commitWithRetry(spark: SparkSession, fs: FileSystem, root: Path,
       lines: Seq[String], operation: Option[String], scope: CommitScope): Unit = {
     beforeDmlCommit()
     var checked = scope.readVersion
-    var attempt = 0
-    while (true) {
+    def validate(): Unit = {
       val latest = DeltaScan.latestVersion(spark, root.toString)
       if (latest > checked) {
         checkDmlConflicts(spark, fs, root, scope, checked, latest)
         checked = latest
       }
-      try { writeCommitFile(fs, root, latest + 1, lines, operation = operation); return }
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > MaxCommitRetries) throw e
-      }
     }
+    validate()
+    TableCommit.retry(revalidate = _ => validate())(
+      writeCommitFile(fs, root, checked + 1, lines, operation = operation))
   }
 
-  /** shared conditional-commit write (create with overwrite=false is
-    * the atomic guard) */
   /** suppresses the auto-checkpoint while a checkpoint itself is being
     * written (its v2 protocol-upgrade commit must not recurse) */
   private val inCheckpoint = new ThreadLocal[java.lang.Boolean] {
@@ -3237,74 +3127,13 @@ object DeltaWrite {
     val actions = operation.map(op =>
       s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":${jstr(op)}}}""")
       .toSeq ++ stamped
-    val logDir = new Path(root, "_delta_log")
-    fs.mkdirs(logDir)
-    val commitFile = new Path(logDir, f"$version%020d.json")
-    try AtomicFiles.publishUtf8(fs, commitFile,
-      actions.mkString("", "\n", "\n"), overwrite = false)
-    catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent Delta commit detected: $commitFile already exists — " +
-            "another writer committed this version; re-read the table and retry", e)
-    }
+    TableCommit.publish(fs, new Path(root, f"_delta_log/$version%020d.json"),
+      actions.mkString("", "\n", "\n"), "Delta")
     maybeAutoCheckpoint(SparkSession.active, fs, root, version)
   }
 
   /** all data files under the table root, as (relative path, size),
     * excluding the log dir and non-parquet markers */
-  /** STAGE-then-MOVE write: `run` writes parquet into a writer-private
-    * hidden staging dir; every produced file is then renamed under
-    * `root/destPrefix` and returned as (relative path, size). The
-    * returned list IS the writer's add set — no directory-listing diff,
-    * so a concurrent writer's in-flight files can never be
-    * cross-claimed. Renames are same-volume moves on HDFS/local FS. */
-  private def writeStaged(fs: FileSystem, root: Path, destPrefix: String)
-      (run: String => Unit): Seq[(String, Long)] = {
-    val staging = new Path(root,
-      s".staging-${java.util.UUID.randomUUID().toString.take(12)}")
-    // INT64 micros is the stats-bearing parquet timestamp encoding:
-    // Spark's INT96 default is a deprecated legacy type with NO usable
-    // column statistics, so footer-harvested `stats` would silently
-    // lack timestamp bounds — costing data skipping and metadata-only
-    // aggregates ([[MetaAgg]]). The reader handles both; existing
-    // INT96 files stay valid.
-    val sparkOpt = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-    val tsKey = "spark.sql.parquet.outputTimestampType"
-    val prevTs = sparkOpt.flatMap(_.conf.getOption(tsKey))
-    sparkOpt.foreach(_.conf.set(tsKey, "TIMESTAMP_MICROS"))
-    try run(staging.toString)
-    finally (sparkOpt, prevTs) match {
-      case (Some(s), Some(v)) => s.conf.set(tsKey, v)
-      case (Some(s), scala.None) => s.conf.unset(tsKey)
-      case _ => ()
-    }
-    def inner(dir: Path, prefix: String): Seq[(String, Long)] =
-      fs.listStatus(dir).toSeq.flatMap { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory) inner(st.getPath, s"$prefix$name/")
-        else if (name.endsWith(".parquet")) Seq((s"$prefix$name", st.getLen))
-        else Seq.empty
-      }
-    val moved = inner(staging, "").map { case (in, size) =>
-      val rel = if (destPrefix.isEmpty) in else s"$destPrefix/$in"
-      val dest = new Path(root, rel)
-      Option(dest.getParent).foreach(fs.mkdirs)
-      require(fs.rename(new Path(staging, in), dest),
-        s"could not move staged data file $in into $dest")
-      // rename preserves mtime, so a data phase longer than vacuum's
-      // retention window would leave the moved-but-uncommitted file
-      // already outside the orphan protection window; re-stamp the
-      // clock at MOVE time so the window starts when the file becomes
-      // visible in the root
-      fs.setTimes(dest, System.currentTimeMillis(), -1)
-      (rel, size)
-    }
-    fs.delete(staging, true)
-    moved
-  }
-
   private def listDataFiles(fs: FileSystem, root: Path): Seq[(String, Long)] = {
     if (!fs.exists(root)) return Seq.empty
     val rootStr = root.toString.stripSuffix("/") + "/"
@@ -3357,17 +3186,6 @@ object DeltaWrite {
     * throwing — a legacy log must degrade to the old raw comparison,
     * never crash replay. */
   private def decodePath(p: String): String = DeltaScan.percentDecode(p)
-
-  /** JSON string literal with full control-char escaping */
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 
   // ======================================================================
   // ROW TRACKING (Delta PROTOCOL §Row Tracking): stable per-row
@@ -3471,7 +3289,7 @@ object DeltaWrite {
     val conf = spark.sparkContext.hadoopConfiguration
     val live = replayActions(spark, fs, tablePath)
       .collect { case (p, true, _, _) => p }.sorted
-    val backfill = parMetaMap(live) { rel =>
+    val backfill = TableCommit.parMap(live) { rel =>
       val p = new Path(root, rel)
       val size = fs.getFileStatus(p).getLen
       val stats = ParquetStats.statsJson(conf, p)
@@ -3511,7 +3329,6 @@ object DeltaWrite {
       case (n, i) if n.has("add") && !n.get("add").has("baseRowId") => i
     }
     if (needsStamp.isEmpty) return actions
-    val conf = spark.sparkContext.hadoopConfiguration
     var hwm = rowIdHighWaterMark(spark, root.toString)
     val out = actions.toArray
     needsStamp.foreach { i =>
@@ -3519,12 +3336,8 @@ object DeltaWrite {
         .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
       val rows = Option(add.get("stats")).filterNot(_.isNull).flatMap { st =>
         Option(mapper.readTree(st.asText()).get("numRecords")).map(_.asLong())
-      }.getOrElse {
-        val p = new Path(root, decodePath(add.get("path").asText()))
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-        try r.getRecordCount finally r.close()
-      }
+      }.getOrElse(TableCommit.rowCount(TableCommit.readFooter(fs,
+        new Path(root, decodePath(add.get("path").asText())))))
       add.put("baseRowId", hwm + 1L)
       add.put("defaultRowCommitVersion", version)
       hwm += math.max(rows, 0L)

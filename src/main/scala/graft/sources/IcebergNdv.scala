@@ -55,12 +55,12 @@ object IcebergNdv {
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val hint = new Path(tablePath, "metadata/version-hint.text")
     require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = IcebergWrite.readUtf8(fs, hint).trim.toInt
+    val prev = IcebergScan.readUtf8(fs, hint).trim.toInt
     val version = prev + 1
     val root = fs.makeQualified(new Path(tablePath))
     val metaDir = new Path(root, "metadata")
     val mapper = new ObjectMapper()
-    val node = mapper.readTree(IcebergWrite.readUtf8(fs,
+    val node = mapper.readTree(IcebergScan.readUtf8(fs,
       new Path(metaDir, s"v$prev.metadata.json"))).asInstanceOf[ObjectNode]
     val snapshotId = Option(node.get("current-snapshot-id")).map(_.asLong())
       .filter(_ != -1L).getOrElse(throw new IllegalArgumentException(
@@ -125,16 +125,12 @@ object IcebergNdv {
     }
     node.set[ObjectNode]("statistics", kept)
     node.put("last-updated-ms", System.currentTimeMillis())
-    val metaPath = new Path(metaDir, s"v$version.metadata.json")
-    try IcebergWrite.writeUtf8(fs, metaPath, node.toString, overwrite = false)
+    try IcebergWrite.publishMetadata(fs, metaDir, version, node.toString)
     catch {
-      case e: java.io.IOException =>
+      case e: java.util.ConcurrentModificationException =>
         fs.delete(statsPath, false)
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent Iceberg commit detected: $metaPath already exists — " +
-            "another writer committed this version; re-run analyze", e)
+        throw e
     }
-    IcebergWrite.writeUtf8(fs, new Path(metaDir, "version-hint.text"), version.toString)
     sketches.map { case (n, fid, ndv, bytes) => ColumnStats(n, fid, ndv, bytes) }
   }
 
@@ -149,9 +145,9 @@ object IcebergNdv {
     val fs = new Path(tablePath).getFileSystem(conf)
     val hint = new Path(tablePath, "metadata/version-hint.text")
     require(fs.exists(hint), s"no Iceberg table at $tablePath")
-    val prev = IcebergWrite.readUtf8(fs, hint).trim.toInt
+    val prev = IcebergScan.readUtf8(fs, hint).trim.toInt
     val mapper = new ObjectMapper()
-    val node = mapper.readTree(IcebergWrite.readUtf8(fs,
+    val node = mapper.readTree(IcebergScan.readUtf8(fs,
       new Path(tablePath, s"metadata/v$prev.metadata.json")))
     val snapshotId = Option(node.get("current-snapshot-id")).map(_.asLong())
       .filter(_ != -1L).getOrElse(return scala.None)
@@ -226,12 +222,12 @@ object IcebergPartitionStats {
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val hint = new Path(tablePath, "metadata/version-hint.text")
     require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = IcebergWrite.readUtf8(fs, hint).trim.toInt
+    val prev = IcebergScan.readUtf8(fs, hint).trim.toInt
     val version = prev + 1
     val root = fs.makeQualified(new Path(tablePath))
     val metaDir = new Path(root, "metadata")
     val mapper = new ObjectMapper()
-    val node = mapper.readTree(IcebergWrite.readUtf8(fs,
+    val node = mapper.readTree(IcebergScan.readUtf8(fs,
       new Path(metaDir, s"v$prev.metadata.json")))
       .asInstanceOf[ObjectNode]
     val snapshotId = Option(node.get("current-snapshot-id")).map(_.asLong())
@@ -341,17 +337,12 @@ object IcebergPartitionStats {
     entry.put("file-size-in-bytes", fs.getFileStatus(statsPath).getLen)
     node.set[ObjectNode]("partition-statistics", kept)
     node.put("last-updated-ms", System.currentTimeMillis())
-    val metaPath = new Path(metaDir, s"v$version.metadata.json")
-    try IcebergWrite.writeUtf8(fs, metaPath, node.toString, overwrite = false)
+    try IcebergWrite.publishMetadata(fs, metaDir, version, node.toString)
     catch {
-      case e: java.io.IOException =>
+      case e: java.util.ConcurrentModificationException =>
         fs.delete(statsPath, false)
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent Iceberg commit detected: $metaPath already exists — " +
-            "another writer committed this version; re-run", e)
+        throw e
     }
-    IcebergWrite.writeUtf8(fs, new Path(metaDir, "version-hint.text"),
-      version.toString)
     df
   }
 
@@ -362,8 +353,8 @@ object IcebergPartitionStats {
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val hint = new Path(tablePath, "metadata/version-hint.text")
     require(fs.exists(hint), s"no Iceberg table at $tablePath")
-    val prev = IcebergWrite.readUtf8(fs, hint).trim.toInt
-    val node = new ObjectMapper().readTree(IcebergWrite.readUtf8(fs,
+    val prev = IcebergScan.readUtf8(fs, hint).trim.toInt
+    val node = new ObjectMapper().readTree(IcebergScan.readUtf8(fs,
       new Path(tablePath, s"metadata/v$prev.metadata.json")))
     val snapshotId = Option(node.get("current-snapshot-id")).map(_.asLong())
       .filter(_ != -1L).getOrElse(return scala.None)

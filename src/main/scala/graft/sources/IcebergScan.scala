@@ -646,7 +646,7 @@ object IcebergScan {
       case a: Array[Byte] => a
       case other => other.toString.getBytes("UTF-8")
     }
-    val manifests = readAvro(fs, conf, resolvePath(fs, tablePath, manifestListPath)).map { r =>
+    val manifests = readAvro(fs, conf, new Path(resolvePath(fs, tablePath, manifestListPath))).map { r =>
       val seq = opt(r, "sequence_number").map(_.toString.toLong).getOrElse(0L)
       val specId = opt(r, "partition_spec_id").map(_.toString.toInt).getOrElse(0)
       val content = opt(r, "content").map(_.toString.toInt).getOrElse(0)
@@ -673,7 +673,7 @@ object IcebergScan {
     var planFiles = 0L
     var planBytes = 0L
     manifests.flatMap { case (mp, mSeq, mSpecId) =>
-      readAvro(fs, conf, resolvePath(fs, tablePath, mp)).flatMap { entry =>
+      readAvro(fs, conf, new Path(resolvePath(fs, tablePath, mp))).flatMap { entry =>
         val status = entry.get("status").toString.toInt
         if (status == 2) None // DELETED
         else {
@@ -1241,14 +1241,14 @@ object IcebergScan {
     fs.makeQualified(raw).toString
   }
 
-  private def readAvro(fs: FileSystem, conf: org.apache.hadoop.conf.Configuration,
-                       path: String): Seq[GenericRecord] = {
-    val in = new FsInput(new Path(path), conf)
+  private[sources] def readAvro(fs: FileSystem, conf: org.apache.hadoop.conf.Configuration,
+      path: Path): Seq[GenericRecord] = {
+    val in = new FsInput(path, conf)
     val reader = DataFileReader.openReader(in, new GenericDatumReader[GenericRecord]())
-    try reader.iterator().asScala.toVector finally { reader.close() }
+    try reader.iterator().asScala.toVector finally reader.close()
   }
 
-  private def readUtf8(fs: FileSystem, p: Path): String = {
+  private[sources] def readUtf8(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
   }

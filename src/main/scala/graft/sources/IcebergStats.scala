@@ -6,11 +6,8 @@ import java.nio.charset.StandardCharsets
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.parquet.column.statistics.Statistics
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.types._
 
 /** Iceberg column statistics: the spec's single-value BINARY
@@ -107,58 +104,55 @@ object IcebergStats {
   }
 
   /** (lower, upper, nullCounts) keyed by Iceberg field id, from one
-    * parquet footer — a metadata-only read, same cost class as the
-    * row-count the commit already takes. Bounds only for columns whose
+    * parquet footer (the one [[TableCommit.stage]] read for the row
+    * count). Bounds only for columns whose
     * EVERY row group has usable statistics. */
-  def footerBounds(conf: Configuration, file: Path, schema: StructType,
+  def footerBounds(footer: ParquetMetadata, schema: StructType,
       idByName: Map[String, Int])
       : (Map[Int, Array[Byte]], Map[Int, Array[Byte]], Map[Int, Long]) = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      val lower = Map.newBuilder[Int, Array[Byte]]
-      val upper = Map.newBuilder[Int, Array[Byte]]
-      val nulls = Map.newBuilder[Int, Long]
-      schema.fields.filter(f => supported(f.dataType)).foreach { f =>
-        idByName.get(f.name).foreach { id =>
-          val chunks = blocks.flatMap(_.getColumns.asScala.find { c =>
-            val p = c.getPath.toArray
-            p.length == 1 && p(0) == f.name
-          })
-          if (chunks.length == blocks.length && blocks.nonEmpty) {
-            val stats: Seq[Statistics[_]] = chunks.map(_.getStatistics)
-            if (stats.forall(s => s != null && s.isNumNullsSet))
-              nulls += id -> stats.map(_.getNumNulls).sum
-            if (stats.forall(s => s != null && s.hasNonNullValue)) {
-              val per = stats.flatMap { s =>
-                for {
-                  lo <- encode(f.dataType, s.genericGetMin)
-                  hi <- encode(f.dataType, s.genericGetMax)
-                  loC <- toCmp(f.dataType, lo)
-                  hiC <- toCmp(f.dataType, hi)
-                } yield (lo, hi, loC, hiC)
-              }
-              if (per.length == stats.length) {
-                val lo0 = per.minBy(_._3)(cmpOrd)._1
-                val hi0 = per.maxBy(_._4)(cmpOrd)._2
-                f.dataType match {
-                  case StringType =>
-                    lower += id -> truncateLowerStr(
-                      new String(lo0, StandardCharsets.UTF_8))
-                      .getBytes(StandardCharsets.UTF_8)
-                    truncateUpperStr(new String(hi0, StandardCharsets.UTF_8))
-                      .foreach(u => upper += id -> u.getBytes(StandardCharsets.UTF_8))
-                  case _ =>
-                    lower += id -> lo0
-                    upper += id -> hi0
-                }
+    val blocks = footer.getBlocks.asScala.toSeq
+    val lower = Map.newBuilder[Int, Array[Byte]]
+    val upper = Map.newBuilder[Int, Array[Byte]]
+    val nulls = Map.newBuilder[Int, Long]
+    schema.fields.filter(f => supported(f.dataType)).foreach { f =>
+      idByName.get(f.name).foreach { id =>
+        val chunks = blocks.flatMap(_.getColumns.asScala.find { c =>
+          val p = c.getPath.toArray
+          p.length == 1 && p(0) == f.name
+        })
+        if (chunks.length == blocks.length && blocks.nonEmpty) {
+          val stats: Seq[Statistics[_]] = chunks.map(_.getStatistics)
+          if (stats.forall(s => s != null && s.isNumNullsSet))
+            nulls += id -> stats.map(_.getNumNulls).sum
+          if (stats.forall(s => s != null && s.hasNonNullValue)) {
+            val per = stats.flatMap { s =>
+              for {
+                lo <- encode(f.dataType, s.genericGetMin)
+                hi <- encode(f.dataType, s.genericGetMax)
+                loC <- toCmp(f.dataType, lo)
+                hiC <- toCmp(f.dataType, hi)
+              } yield (lo, hi, loC, hiC)
+            }
+            if (per.length == stats.length) {
+              val lo0 = per.minBy(_._3)(cmpOrd)._1
+              val hi0 = per.maxBy(_._4)(cmpOrd)._2
+              f.dataType match {
+                case StringType =>
+                  lower += id -> truncateLowerStr(
+                    new String(lo0, StandardCharsets.UTF_8))
+                    .getBytes(StandardCharsets.UTF_8)
+                  truncateUpperStr(new String(hi0, StandardCharsets.UTF_8))
+                    .foreach(u => upper += id -> u.getBytes(StandardCharsets.UTF_8))
+                case _ =>
+                  lower += id -> lo0
+                  upper += id -> hi0
               }
             }
           }
         }
       }
-      (lower.result(), upper.result(), nulls.result())
-    } finally reader.close()
+    }
+    (lower.result(), upper.result(), nulls.result())
   }
 
   // ---- decode: spec binary → the pruner's comparison domain -----------

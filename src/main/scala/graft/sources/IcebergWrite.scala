@@ -1,14 +1,11 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
-
 import scala.jdk.CollectionConverters._
 import scala.util.chaining._
 
 import org.apache.avro.Schema
-import org.apache.avro.file.{DataFileReader, DataFileWriter}
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.avro.mapred.FsInput
+import org.apache.avro.file.DataFileWriter
+import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
@@ -34,15 +31,17 @@ import org.apache.spark.sql.types._
   * sequence_number / min_sequence_number / file and row counts, java
   * field names, field-id resolution), and position-delete parquet
   * files carry the reserved column ids 2147483546 (`file_path`) /
-  * 2147483545 (`pos`). Concurrent commits are detected and rejected
-  * (conditional commit via create-fail on the version file), not
-  * retried.
+  * 2147483545 (`pos`). Data files are staged and metadata published
+  * through [[TableCommit]]; appends and delete commits retry a lost
+  * race when the winner commutes.
   *
   * Scale: identical to [[DeltaWrite]] — the data write is Spark's
   * distributed parquet writer; per commit the driver reads only new
   * parquet FOOTERS (row counts) and writes KBs of metadata.
   */
 object IcebergWrite {
+  import IcebergScan.{readAvro, readUtf8}
+  import TableCommit.{jstr, Staged}
 
   /** `partitionBy` entries are bare column names (identity spec) or
     * the spec's HIDDEN-partitioning transforms: `day(ts)` / `month(ts)`
@@ -90,7 +89,7 @@ object IcebergWrite {
 
   /** [[append]] with full OCC RETRY. Two layers: (a) a CAS lost AFTER
     * the data files are staged retries metadata assembly only — the
-    * parquet is reused verbatim, see the loop in [[commit]]; (b) a
+    * parquet is reused verbatim, see [[commitWithRetry]]; (b) a
     * race detected BEFORE any data is written (the fast-fail) re-runs
     * the whole append here. Blind appends commute with everything
     * except a concurrent schema/partition-spec change, which re-runs
@@ -98,18 +97,8 @@ object IcebergWrite {
     * on a real mismatch). Lost attempts leave unreferenced files for
     * [[removeOrphanFiles]]-style cleanup, never corruption. */
   def appendWithRetry(spark: SparkSession, df: DataFrame, tablePath: String,
-      maxRetries: Int = 5): Unit = {
-    require(maxRetries >= 0, s"maxRetries must be >= 0, got $maxRetries")
-    var attempt = 0
-    while (true) {
-      try { append(spark, df, tablePath); return }
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
-    }
-  }
+      maxRetries: Int = TableCommit.MaxCommitRetries): Unit =
+    TableCommit.retry(maxRetries)(append(spark, df, tablePath))
 
   /** OCC RE-EXECUTION wrapper for the copy-on-write ops (updateWhere /
     * merge / compact / zorder): a loser re-RUNS `body`, which replans
@@ -119,27 +108,14 @@ object IcebergWrite {
     * reuse) and [[deleteWhere]]/[[deleteEqual]] (delete files reused
     * when the winner commutes); use this for everything else:
     * `IcebergWrite.retryOnConflict() { IcebergWrite.merge(...) }`. */
-  def retryOnConflict[T](maxRetries: Int = 5)(body: => T): T = {
-    require(maxRetries >= 0, s"maxRetries must be >= 0, got $maxRetries")
-    var attempt = 0
-    while (true) {
-      try return body
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+  def retryOnConflict[T](maxRetries: Int = TableCommit.MaxCommitRetries)(body: => T): T =
+    TableCommit.retry(maxRetries)(body)
 
   private def appendTxn(spark: SparkSession, df: DataFrame, tablePath: String,
       txn: Option[(String, Long)]): Unit = {
     import org.apache.spark.sql.functions.col
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
+    val prev = currentVersion(fs, tablePath)
     // schema drift would silently corrupt the table: compare
     // (names, types) against the current metadata's spec schema
     val prevMeta = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -199,13 +175,12 @@ object IcebergWrite {
     * JSON's table properties; None if this app never committed */
   def lastTxnVersion(spark: SparkSession, tablePath: String, appId: String): Option[Long] = {
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    if (!fs.exists(hint)) return scala.None
-    val v = readUtf8(fs, hint).trim.toInt
-    val node = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(readUtf8(fs, new Path(tablePath, s"metadata/v$v.metadata.json")))
-    Option(node.get("properties")).flatMap(p =>
-      Option(p.get(s"graft.txn.$appId")).map(_.asText().toLong))
+    latestVersion(fs, tablePath).flatMap { v =>
+      val node = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(readUtf8(fs, new Path(tablePath, s"metadata/v$v.metadata.json")))
+      Option(node.get("properties")).flatMap(p =>
+        Option(p.get(s"graft.txn.$appId")).map(_.asText().toLong))
+    }
   }
 
   /** APPEND WITH SCHEMA EVOLUTION: columns of `df` the table lacks are
@@ -221,9 +196,7 @@ object IcebergWrite {
   def appendEvolve(spark: SparkSession, df: DataFrame, tablePath: String): Unit = {
     import org.apache.spark.sql.functions.{col, lit}
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
+    val prev = currentVersion(fs, tablePath)
     val metaDir = new Path(fs.makeQualified(new Path(tablePath)), "metadata")
     val prevCarry = carryFromPrev(fs, metaDir, prev)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -288,9 +261,7 @@ object IcebergWrite {
     defaults.keys.foreach(k => require(cols.exists(_.name == k),
       s"default for '$k' names no added column"))
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
+    val prev = currentVersion(fs, tablePath)
     val version = prev + 1
     val metaDir = new Path(fs.makeQualified(new Path(tablePath)), "metadata")
     // default VALUES are a format-version-3 schema feature (spec
@@ -332,15 +303,7 @@ object IcebergWrite {
     node.put("current-schema-id", newSchemaId)
     node.put("last-column-id", carry.lastColumnId + cols.length)
     node.put("last-updated-ms", System.currentTimeMillis())
-    val metaPath = new Path(metaDir, s"v$version.metadata.json")
-    try writeUtf8(fs, metaPath, node.toString, overwrite = false)
-    catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent Iceberg commit detected: $metaPath already exists — " +
-            "another writer committed this version; re-read the table and retry", e)
-    }
-    writeUtf8(fs, new Path(metaDir, "version-hint.text"), version.toString)
+    publishMetadata(fs, metaDir, version, node.toString)
   }
 
   /** MERGE WITH AUTOMATIC SCHEMA EVOLUTION — source columns the table
@@ -598,19 +561,10 @@ object IcebergWrite {
       txn: Option[(String, Long)] = None,
       branch: Option[String] = scala.None): Unit = {
     val root = fs.makeQualified(new Path(tablePath))
-    // fast-fail a stale racing writer BEFORE any data is written (no
-    // orphan parquet); the overwrite=false create below remains the
-    // atomic guard for the true photo-finish race
-    val targetMeta = new Path(root, s"metadata/v$version.metadata.json")
-    if (fs.exists(targetMeta))
-      throw new java.util.ConcurrentModificationException(
-        s"concurrent Iceberg commit detected: $targetMeta already exists — " +
-          "another writer committed this version; re-read the table and retry")
+    requireFreeVersion(fs, root, version)
     val conf = spark.sparkContext.hadoopConfiguration
     val metaDir = new Path(root, "metadata")
 
-    // a table upgraded to v2 by deleteWhere stays v2 on later appends
-    val fmtVersion = if (version == 1) 1 else prevFormatVersion(fs, metaDir, version - 1)
     val carry = carryOverride.getOrElse(
       if (version == 1) freshCarry(df.schema, Nil)
       else carryFromPrev(fs, metaDir, version - 1))
@@ -626,8 +580,6 @@ object IcebergWrite {
     enforceRequired(df, IcebergScan.sparkSchema(
       new com.fasterxml.jackson.databind.ObjectMapper().readTree(schemaJson)))
 
-    val dataDir = new Path(root, "data")
-    val pre = listParquet(fs, dataDir).toSet
     // the physical sort applied below follows the carry READ AT WRITE
     // TIME — an OCC retry must stamp this order's id even if a racing
     // setSortOrder changed the default (order ids are never reused, so
@@ -635,7 +587,10 @@ object IcebergWrite {
     val sortFields = carry.defaultSortFields
     val stampSortId =
       if (sortFields.isEmpty) scala.None else Some(carry.defaultSortOrderId)
-    withFieldIdWrites(spark) {
+    // the added files' record counts / sizes / footers are reusable
+    // verbatim across OCC retries (the data files never move, only the
+    // metadata around them is re-assembled)
+    val added = TableCommit.stage(fs, root, "data") { staging =>
       // transform fields derive their hive value; partitionBy drops the
       // DERIVED column from the payload while the SOURCE column stays —
       // exactly the spec's hidden-partitioning layout (identity fields
@@ -665,28 +620,19 @@ object IcebergWrite {
             sortOrderExprs(sortFields)): _*)
       val writer = sorted.write.mode("append")
       (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
-        .parquet(dataDir.toString)
+        .parquet(staging)
     }
-    val added = listParquet(fs, dataDir).filterNot(pre.contains)
-    require(added.nonEmpty, "write produced no data files (empty input?)")
+    // an input with no rows stages no file: the commit still lands
+    // (schema, txn marker), adding no data
     fs.mkdirs(metaDir)
-
-    // record counts / sizes from the parquet footers — no data
-    // re-read; reusable verbatim across OCC retries (the data files
-    // never move, only the metadata around them is re-assembled)
-    val filesWithRows = parMap(added) { rel =>
-      val dataPath = new Path(root, rel)
-      val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(dataPath, conf))
-      val rows = try footer.getRecordCount finally footer.close()
-      (rel, rows, fs.getFileStatus(dataPath).getLen)
-    }
 
     // one manifest for this commit's files (relative paths);
     // partitioned tables get typed partition records parsed from the
     // hive path. Version-DEPENDENT (snapshot ids, seq, file names) —
     // assembled per OCC attempt.
-    def assemble(version: Int, carry: SchemaCarry, fmtVersion: Int): Unit = {
+    def assemble(version: Int, carry: SchemaCarry): Unit = {
+      // a table upgraded to v2 by deleteWhere stays v2 on later appends
+      val fmtVersion = if (version == 1) 1 else prevFormatVersion(fs, metaDir, version - 1)
       // nonce'd names: two writers racing to the same version must not
       // collide on the avro paths (resolution is pointer-based through
       // the metadata JSON; only the v$N.metadata.json CAS arbitrates)
@@ -698,24 +644,23 @@ object IcebergWrite {
       // (sequential from the table's row-id counter) so their ids stay
       // stable however later rewrites reorder manifests
       val rowIdBase: Seq[Option[Long]] =
-        if (fmtVersion < 3) filesWithRows.map(_ => scala.None)
-        else filesWithRows.scanLeft(nextRowIdOf(fs, metaDir, version - 1)) {
-          case (acc, (_, rows, _)) => acc + rows
-        }.init.map(Some(_))
+        if (fmtVersion < 3) added.map(_ => scala.None)
+        else added.scanLeft(nextRowIdOf(fs, metaDir, version - 1))(_ + _.rows)
+          .init.map(Some(_))
       writeAvro(fs, new Path(root, manifestRel), entrySchema,
-        parMap(filesWithRows.zip(rowIdBase)) { case ((rel, rows, len), rowId) => // footer stats in parallel
+        added.zip(rowIdBase).map { case (f, rowId) =>
           val file = new GenericData.Record(dataFileSchema)
           file.put("content", 0) // DATA
-          file.put("file_path", rel)
+          file.put("file_path", f.rel)
           file.put("file_format", "PARQUET")
           file.put("partition",
-            partitionRecordOf(dataFileSchema, recordFields, rel))
-          file.put("record_count", rows)
-          file.put("file_size_in_bytes", len)
+            partitionRecordOf(dataFileSchema, recordFields, f.rel))
+          file.put("record_count", f.rows)
+          file.put("file_size_in_bytes", f.size)
           file.put("block_size_in_bytes", DefaultBlockSize)
           stampSortId.foreach(id => file.put("sort_order_id", Integer.valueOf(id)))
           rowId.foreach(id => file.put("first_row_id", Long.box(id)))
-          attachStats(file, dataFileSchema, conf, new Path(root, rel), carry.schemaJson)
+          attachStats(file, dataFileSchema, f.footer, carry.schemaJson)
           val entry = new GenericData.Record(entrySchema)
           entry.put("status", 1) // ADDED
           entry.put("snapshot_id", version.toLong)
@@ -746,9 +691,9 @@ object IcebergWrite {
       writeAvro(fs, new Path(root, listRel), manifestListSchema,
         (prevManifests :+ ManifestRef(manifestRel, manifestLen, carry.defaultSpecId,
           content = 0, seq = version.toLong, minSeq = version.toLong,
-          snapshotId = version.toLong, addedFiles = filesWithRows.size,
+          snapshotId = version.toLong, addedFiles = added.size,
           existingFiles = 0, deletedFiles = 0,
-          addedRows = filesWithRows.map(_._2).sum, existingRows = 0L,
+          addedRows = added.map(_.rows).sum, existingRows = 0L,
           deletedRows = 0L)) pipe (rs => listRecords(fs, conf, root, carry, rs)),
         manifestListMeta(version, fmtVersion))
 
@@ -759,42 +704,81 @@ object IcebergWrite {
         carry, listRel, operation = "append", propsOverride = txnProps(txn) ++
           (if (version == 1) Map(FieldIdsProp -> "true") else Map.empty),
         branchRef = branch,
-        assignedRows = if (fmtVersion < 3) 0L else filesWithRows.map(_._2).sum)
+        assignedRows = if (fmtVersion < 3) 0L else added.map(_.rows).sum)
     }
 
-    // OCC assembly retry: a fast-append commutes with ANY concurrent
-    // commit that leaves the schema and partition spec intact — on a
-    // lost CAS the winner's manifests are re-read, ours is rebuilt at
-    // the next version (the expensive data files are reused verbatim;
-    // the lost attempt's manifest/list avros are unreferenced orphans).
-    // A concurrent schema/spec change rethrows loudly: the staged
-    // files were stamped with the OLD schema's field ids.
-    beforeCommit()
-    var v = version
-    var c = carry
-    var fv = fmtVersion
-    var attempt = 0
-    while (attempt <= MaxCommitRetries) {
-      try { assemble(v, c, fv); return }
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (version == 1 || attempt > MaxCommitRetries) throw e
-          val latest = readUtf8(fs, new Path(root, "metadata/version-hint.text")).trim.toInt
-          val nc = carryFromPrev(fs, metaDir, latest)
-          if (nc.schemaJson != c.schemaJson || nc.specFieldsJson != c.specFieldsJson)
-            throw new java.util.ConcurrentModificationException(
-              s"append lost the commit race at $tablePath and the winner " +
-                "changed the schema or partition spec — the staged files " +
-                "carry the old field ids; re-run the append", e)
-          c = nc
-          fv = prevFormatVersion(fs, metaDir, latest)
-          v = latest + 1
-      }
-    }
+    // a fast-append commutes with ANY concurrent commit that leaves the
+    // schema and partition spec intact: the winner's manifests are
+    // re-read and ours is rebuilt at the next version (the lost
+    // attempt's manifest/list avros are unreferenced orphans). A create
+    // has no winner to commute with.
+    commitWithRetry(spark, fs, root, tablePath, "append", carry, version,
+      maxRetries = if (version == 1) 0 else TableCommit.MaxCommitRetries)(assemble)
   }
 
-  private val MaxCommitRetries = 5
+  /** the table's current metadata version: the version hint, advanced
+    * past any version already published beyond it — the hint swap
+    * trails the metadata CAS and may be a delete-then-rename, so a
+    * concurrent commit can leave it lagging or briefly absent. None
+    * when `tablePath` holds no metadata version. */
+  private def latestVersion(fs: FileSystem, tablePath: String): Option[Int] = {
+    val metaDir = new Path(tablePath, "metadata")
+    var v =
+      try readUtf8(fs, new Path(metaDir, "version-hint.text")).trim.toInt
+      catch { case _: java.io.FileNotFoundException => 0 }
+    while (fs.exists(new Path(metaDir, s"v${v + 1}.metadata.json"))) v += 1
+    Some(v).filter(_ > 0)
+  }
+
+  private def currentVersion(fs: FileSystem, tablePath: String): Int = {
+    val v = latestVersion(fs, tablePath)
+    require(v.nonEmpty, s"no Iceberg table at $tablePath — use create")
+    v.get
+  }
+
+  /** fast-fail a stale racing writer BEFORE any data is written (no
+    * orphan parquet); the conditional publish stays the atomic guard
+    * for the true photo-finish race */
+  private def requireFreeVersion(fs: FileSystem, root: Path, version: Int): Unit = {
+    val targetMeta = new Path(root, s"metadata/v$version.metadata.json")
+    if (fs.exists(targetMeta)) throw TableCommit.slotTaken("Iceberg", targetMeta)
+  }
+
+  /** The OCC loop of every Iceberg snapshot commit: `assemble` writes
+    * the manifests + list and publishes metadata at version v. A lost
+    * race re-validates against the winner, then re-assembles at the
+    * next version with the staged files reused verbatim: the winner
+    * must keep the schema and partition spec (staged files carry the
+    * planned field ids and layout) and, when `plannedLive` is
+    * non-empty, every data file the staged deletes reference (a
+    * concurrent compact/rewrite would resurrect the deleted rows
+    * through the rewritten copies). */
+  private def commitWithRetry(spark: SparkSession, fs: FileSystem, root: Path,
+      tablePath: String, op: String, carry: SchemaCarry, version: Int,
+      plannedLive: Set[String] = Set.empty,
+      maxRetries: Int = TableCommit.MaxCommitRetries)(
+      assemble: (Int, SchemaCarry) => Unit): Unit = {
+    beforeCommit()
+    val metaDir = new Path(root, "metadata")
+    var v = version
+    var c = carry
+    TableCommit.retry(maxRetries, { e =>
+      val latest = currentVersion(fs, tablePath)
+      val nc = carryFromPrev(fs, metaDir, latest)
+      if (nc.schemaJson != c.schemaJson || nc.specFieldsJson != c.specFieldsJson)
+        throw new java.util.ConcurrentModificationException(
+          s"$op lost the commit race at $tablePath and the winner changed " +
+            s"the schema or partition spec — re-run the $op", e)
+      if (plannedLive.nonEmpty &&
+          !plannedLive.subsetOf(IcebergScan.currentDataFiles(spark, tablePath)._2.toSet))
+        throw new java.util.ConcurrentModificationException(
+          s"$op lost the commit race at $tablePath and the winner " +
+            s"removed/rewrote data files this $op references — re-run the " +
+            s"$op on the current table state", e)
+      c = nc
+      v = latest + 1
+    })(assemble(v, c))
+  }
 
   /** test seam: runs right before a commit's first CAS attempt — the
     * deterministic way to land a racing commit inside the window the
@@ -827,23 +811,6 @@ object IcebergWrite {
     }.toSeq: _*)
   }
 
-  private def withFieldIdWrites[T](spark: SparkSession)(body: => T): T = {
-    // field ids make rename-by-id resolution sound; INT64 micros is the
-    // SPEC's timestamp physical type (Spark's INT96 default is a
-    // non-conformant legacy encoding external Iceberg readers — and our
-    // own parquet-mr streaming decode — reject)
-    val keys = Seq(
-      "spark.sql.parquet.fieldId.write.enabled" -> "true",
-      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
-    val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, scala.None) => spark.conf.unset(k)
-    }
-  }
-
   /** RENAME a top-level column WITHOUT rewriting any data — the
     * field-id path: ids never change, so a new schema (same ids, new
     * name) registered under the next schema-id re-labels every byte in
@@ -863,9 +830,7 @@ object IcebergWrite {
     // derivation and source-column pruning follow the new name
     // (proven in IcebergScanSpec).
     val fs0 = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint0 = new Path(tablePath, "metadata/version-hint.text")
-    if (fs0.exists(hint0)) {
-      val prev0 = readUtf8(fs0, hint0).trim.toInt
+    latestVersion(fs0, tablePath).foreach { prev0 =>
       val metaDir0 = new Path(fs0.makeQualified(new Path(tablePath)), "metadata")
       val specNames = carryFromPrev(fs0, metaDir0, prev0).partCols
       require(!specNames.contains(to),
@@ -895,9 +860,7 @@ object IcebergWrite {
     // live eq-delete reference check BEFORE the metadata edit
     val mapper0 = new com.fasterxml.jackson.databind.ObjectMapper()
     val fs0 = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint0 = new Path(tablePath, "metadata/version-hint.text")
-    if (fs0.exists(hint0)) {
-      val prev0 = readUtf8(fs0, hint0).trim.toInt
+    latestVersion(fs0, tablePath).foreach { prev0 =>
       val metaDir0 = new Path(fs0.makeQualified(new Path(tablePath)), "metadata")
       val carry0 = carryFromPrev(fs0, metaDir0, prev0)
       // a TRANSFORM spec field derives from its source by source-id: with
@@ -951,9 +914,7 @@ object IcebergWrite {
   def updatePartitionSpec(spark: SparkSession, tablePath: String,
       partitionBy: Seq[String]): Unit = {
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
+    val prev = currentVersion(fs, tablePath)
     val version = prev + 1
     val root = fs.makeQualified(new Path(tablePath))
     val metaDir = new Path(root, "metadata")
@@ -1029,15 +990,7 @@ object IcebergWrite {
       "partition-spec", mapper.readTree(newFieldsJson))
     node.put("last-partition-id", maxFieldId + pfs.size)
     node.put("last-updated-ms", System.currentTimeMillis())
-    val metaPath = new Path(metaDir, s"v$version.metadata.json")
-    try writeUtf8(fs, metaPath, node.toString, overwrite = false)
-    catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent Iceberg commit detected: $metaPath already exists — " +
-            "another writer committed this version; re-read the table and retry", e)
-    }
-    writeUtf8(fs, new Path(metaDir, "version-hint.text"), version.toString)
+    publishMetadata(fs, metaDir, version, node.toString)
   }
 
   /** Register a table SORT ORDER (spec §Sort Orders) and make it the
@@ -1063,9 +1016,7 @@ object IcebergWrite {
   def setSortOrder(spark: SparkSession, tablePath: String,
       orderBy: Seq[String]): Unit = {
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
+    val prev = currentVersion(fs, tablePath)
     val version = prev + 1
     val root = fs.makeQualified(new Path(tablePath))
     val metaDir = new Path(root, "metadata")
@@ -1147,15 +1098,7 @@ object IcebergWrite {
       "sort-orders", mapper.readTree(ordersJson))
     node.put("default-sort-order-id", defaultId)
     node.put("last-updated-ms", System.currentTimeMillis())
-    val metaPath = new Path(metaDir, s"v$version.metadata.json")
-    try writeUtf8(fs, metaPath, node.toString, overwrite = false)
-    catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent Iceberg commit detected: $metaPath already exists — " +
-            "another writer committed this version; re-read the table and retry", e)
-    }
-    writeUtf8(fs, new Path(metaDir, "version-hint.text"), version.toString)
+    publishMetadata(fs, metaDir, version, node.toString)
   }
 
   /** the table's default sort order as (order-id, fields) —
@@ -1164,11 +1107,10 @@ object IcebergWrite {
   private[graft] def defaultSortOrder(spark: SparkSession,
       tablePath: String): (Int, Seq[(String, Boolean, Boolean)]) = {
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    if (!fs.exists(hint)) return (0, Seq.empty)
-    val prev = readUtf8(fs, hint).trim.toInt
-    val carry = carryFromPrev(fs, new Path(tablePath, "metadata"), prev)
-    (carry.defaultSortOrderId, carry.defaultSortFields)
+    latestVersion(fs, tablePath).map { prev =>
+      val carry = carryFromPrev(fs, new Path(tablePath, "metadata"), prev)
+      (carry.defaultSortOrderId, carry.defaultSortFields)
+    }.getOrElse((0, Seq.empty))
   }
 
   /** shared rename/drop core: field-id-marker + partition-column
@@ -1179,9 +1121,7 @@ object IcebergWrite {
       touched: String)(
       xform: (com.fasterxml.jackson.databind.node.ObjectNode, Seq[String]) => Unit): Unit = {
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
+    val prev = currentVersion(fs, tablePath)
     val version = prev + 1
     val root = fs.makeQualified(new Path(tablePath))
     val metaDir = new Path(root, "metadata")
@@ -1218,15 +1158,7 @@ object IcebergWrite {
     node.set("schemas", schemasNode)
     node.put("current-schema-id", newSchemaId)
     node.put("last-updated-ms", System.currentTimeMillis())
-    val metaPath = new Path(metaDir, s"v$version.metadata.json")
-    try writeUtf8(fs, metaPath, node.toString, overwrite = false)
-    catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent Iceberg commit detected: $metaPath already exists — " +
-            "another writer committed this version; re-read the table and retry", e)
-    }
-    writeUtf8(fs, new Path(metaDir, "version-hint.text"), version.toString)
+    publishMetadata(fs, metaDir, version, node.toString)
   }
 
   /** COMPACTION (the spec's `replace` snapshot): rewrite the live data
@@ -1330,16 +1262,10 @@ object IcebergWrite {
       honorSortOrder: Boolean = false): (Int, Int) = {
     require(targetFiles >= 1, s"targetFiles must be >= 1, got $targetFiles")
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
+    val prev = currentVersion(fs, tablePath)
     val version = prev + 1
     val root = fs.makeQualified(new Path(tablePath))
-    val targetMeta = new Path(root, s"metadata/v$version.metadata.json")
-    if (fs.exists(targetMeta))
-      throw new java.util.ConcurrentModificationException(
-        s"concurrent Iceberg commit detected: $targetMeta already exists — " +
-          "another writer committed this version; re-read the table and retry")
+    requireFreeVersion(fs, root, version)
 
     val (_, entries) = IcebergScan.currentEntries(spark, tablePath)
     val dataEntries = entries.filter(_.content == 0)
@@ -1359,8 +1285,6 @@ object IcebergWrite {
     // the output — compacting raw parquet would resurrect deleted rows
     val rewrite = IcebergScan.readFiltered(spark, tablePath, scala.None,
       Some(small.map(_._1.path).toSet))
-    val dataDir = new Path(root, "data")
-    val pre = listParquet(fs, dataDir).toSet
     val shaped = shape(rewrite, targetFiles)
     enforceRequired(shaped, tableSchema0)
     // partitioned tables keep their identity layout: rewritten rows
@@ -1371,7 +1295,8 @@ object IcebergWrite {
       if (honorSortOrder) carry0.defaultSortFields else Seq.empty
     val stampSortId =
       if (sortFields.isEmpty) scala.None else Some(carry0.defaultSortOrderId)
-    withFieldIdWrites(spark) {
+    // stage drops empty outputs (every row of the small set may have died)
+    val added = TableCommit.stage(fs, root, "data") { staging =>
       // transform fields re-derive their hive value from the (possibly
       // updated) source columns — a partition-migrating UPDATE on a
       // hidden-partitioned table lands its rows in their new derived dirs
@@ -1386,18 +1311,9 @@ object IcebergWrite {
             sortOrderExprs(sortFields)): _*)
       val writer0 = sorted.write.mode("append")
       (if (partCols.nonEmpty) writer0.partitionBy(partCols: _*) else writer0)
-        .parquet(dataDir.toString)
+        .parquet(staging)
     }
     val conf = spark.sparkContext.hadoopConfiguration
-    val added0 = listParquet(fs, dataDir).filterNot(pre.contains)
-    // drop empty outputs (every row of the small set may have died)
-    val added = added0.filter { rel =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(root, rel), conf))
-      val n = try r.getRecordCount finally r.close()
-      if (n == 0L) fs.delete(new Path(root, rel), false)
-      n > 0L
-    }
 
     val metaDir = new Path(root, "metadata")
     val fmtVersion = prevFormatVersion(fs, metaDir, prev)
@@ -1417,28 +1333,20 @@ object IcebergWrite {
     val v3 = fmtVersion >= 3
     val entrySchema = manifestSchemaFor(recordFields, v3 = v3)
     val dataFileSchema = entrySchema.getField("data_file").schema()
-    def fileRecord(relPath: String, rows: Long, len: Long,
-        part: GenericData.Record,
+    def fileRecord(staged: Staged,
         firstRowId: Option[Long]): GenericData.Record = {
       val f = new GenericData.Record(dataFileSchema)
       f.put("content", 0)
-      f.put("file_path", relPath)
+      f.put("file_path", staged.rel)
       f.put("file_format", "PARQUET")
-      f.put("partition", part)
-      f.put("record_count", rows)
-      f.put("file_size_in_bytes", len)
+      f.put("partition", partitionRecordOf(dataFileSchema, recordFields, staged.rel))
+      f.put("record_count", staged.rows)
+      f.put("file_size_in_bytes", staged.size)
       f.put("block_size_in_bytes", DefaultBlockSize)
       stampSortId.foreach(id => f.put("sort_order_id", Integer.valueOf(id)))
       firstRowId.foreach(id => f.put("first_row_id", Long.box(id)))
-      attachStats(f, dataFileSchema, conf, new Path(root, relPath), carry.schemaJson)
+      attachStats(f, dataFileSchema, staged.footer, carry.schemaJson)
       f
-    }
-    val addedWithRows = parMap(added) { rel =>
-      val p = new Path(root, rel)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-      val rows = try r.getRecordCount finally r.close()
-      (rel, rows, fs.getFileStatus(p).getLen)
     }
     // v3 row lineage: the rewrite OUTPUTS are new files and receive
     // fresh sequential ids from the table counter (kept files carry
@@ -1448,18 +1356,15 @@ object IcebergWrite {
     // row-lineage carry-over for replaced rows); ids are valid and
     // never reused, but compacted rows get new ones.
     val addedRowIds: Seq[Option[Long]] =
-      if (!v3) addedWithRows.map(_ => scala.None)
-      else addedWithRows.scanLeft(nextRowIdOf(fs, metaDir, prev)) {
-        case (acc, (_, rows, _)) => acc + rows
-      }.init.map(Some(_))
-    val addedRecords = parMap(addedWithRows.zip(addedRowIds)) {
-      case ((rel, rows, len), rowId) =>
-        val e = new GenericData.Record(entrySchema)
-        e.put("status", 1) // ADDED
-        e.put("snapshot_id", version.toLong)
-        e.put("data_file", fileRecord(rel, rows, len,
-          partitionRecordOf(dataFileSchema, recordFields, rel), rowId))
-        e
+      if (!v3) added.map(_ => scala.None)
+      else added.scanLeft(nextRowIdOf(fs, metaDir, prev))(_ + _.rows)
+        .init.map(Some(_))
+    val addedRecords = added.zip(addedRowIds).map { case (staged, rowId) =>
+      val e = new GenericData.Record(entrySchema)
+      e.put("status", 1) // ADDED
+      e.put("snapshot_id", version.toLong)
+      e.put("data_file", fileRecord(staged, rowId))
+      e
     }
     // kept files group by their ORIGINAL spec-id: one manifest per
     // spec, each with its own partition-spec-id header and a partition
@@ -1487,7 +1392,8 @@ object IcebergWrite {
       // its identity — carried verbatim so its rows' ids never shift
       if (dfs.getField("first_row_id") != null)
         entry.firstRowId.foreach(id => f.put("first_row_id", Long.box(id)))
-      attachStats(f, dfs, conf, new Path(root, relOf(entry.path)), carry.schemaJson)
+      attachStats(f, dfs, TableCommit.readFooter(fs, new Path(root, relOf(entry.path))),
+        carry.schemaJson)
       val e = new GenericData.Record(es)
       e.put("status", 0) // EXISTING
       e.put("snapshot_id", version.toLong)
@@ -1545,14 +1451,14 @@ object IcebergWrite {
         snapshotId = version.toLong,
         addedFiles = addedRecords.size, existingFiles = defaultKept.size,
         deletedFiles = 0,
-        addedRows = addedWithRows.map(_._2).sum,
+        addedRows = added.map(_.rows).sum,
         existingRows = defaultKept.map(_._1.rows).sum, deletedRows = 0L) +:
         (historicalManifests ++ prevDeleteManifests)) pipe (rs => listRecords(fs, conf, root, carry, rs)),
       manifestListMeta(version, fmtVersion))
 
     writeMetadataJson(fs, metaDir, root, version, fmtVersion,
       carry, listRel, operation = operation, propsOverride = txnProps(txn),
-      assignedRows = if (!v3) 0L else addedWithRows.map(_._2).sum)
+      assignedRows = if (!v3) 0L else added.map(_.rows).sum)
     (small.size, added.size)
   }
 
@@ -1728,9 +1634,7 @@ object IcebergWrite {
       props: Map[String, String]): Unit = {
     require(props.nonEmpty, "setProperties needs at least one property")
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
+    val prev = currentVersion(fs, tablePath)
     val version = prev + 1
     val metaDir = new Path(fs.makeQualified(new Path(tablePath)), "metadata")
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -1742,28 +1646,18 @@ object IcebergWrite {
     props.foreach { case (k, v) => pnode.put(k, v) }
     node.set[com.fasterxml.jackson.databind.JsonNode]("properties", pnode)
     node.put("last-updated-ms", System.currentTimeMillis())
-    val metaPath = new Path(metaDir, s"v$version.metadata.json")
-    try writeUtf8(fs, metaPath, node.toString, overwrite = false)
-    catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent Iceberg commit detected: $metaPath already exists — " +
-            "another writer committed this version; re-read and retry", e)
-    }
-    writeUtf8(fs, new Path(metaDir, "version-hint.text"), version.toString)
+    publishMetadata(fs, metaDir, version, node.toString)
   }
 
   /** current value of a table property, if set */
   def tableProperty(spark: SparkSession, tablePath: String,
       key: String): Option[String] = {
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    if (!fs.exists(hint)) return scala.None
-    val prev = readUtf8(fs, hint).trim.toInt
-    val metaDir = new Path(fs.makeQualified(new Path(tablePath)), "metadata")
-    val node = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(readUtf8(fs, new Path(metaDir, s"v$prev.metadata.json")))
-    Option(node.get("properties")).flatMap(p => Option(p.get(key))).map(_.asText())
+    latestVersion(fs, tablePath).flatMap { prev =>
+      val node = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(readUtf8(fs, new Path(tablePath, s"metadata/v$prev.metadata.json")))
+      Option(node.get("properties")).flatMap(p => Option(p.get(key))).map(_.asText())
+    }
   }
 
   // ---- merge-on-read DML -----------------------------------------------
@@ -1784,13 +1678,11 @@ object IcebergWrite {
       tableSchema: StructType): Long = {
     import org.apache.spark.sql.functions._
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    val prev = readUtf8(fs, hint).trim.toInt
+    val prev = currentVersion(fs, tablePath)
     val version = prev + 1
     val root = fs.makeQualified(new Path(tablePath))
     val metaDir = new Path(root, "metadata")
     val carry = carryFromPrev(fs, metaDir, prev)
-    val partCols = carry.partCols
     val (_, plannedLive) = IcebergScan.currentDataFiles(spark, tablePath)
 
     // ONE persisted matched-row set feeds both halves of the commit —
@@ -1815,7 +1707,7 @@ object IcebergWrite {
           matched.select(col("__raw_file"), col("__pos")), version,
           carry.partFields.map(_.recordField))
       val nUpdated = dvStaged.map(_._1.map(_.newRows).sum)
-        .getOrElse(delWithRows.map(_._2).sum)
+        .getOrElse(delWithRows.map(_.rows).sum)
       if (nUpdated == 0L) return 0L
 
       val fire = coalesce(cond, lit(false)) // all matched, but keep UPDATE semantics
@@ -1830,24 +1722,9 @@ object IcebergWrite {
         s"UPDATE changes the schema to ${shaped.schema.simpleString} — " +
           s"assignments must preserve the table's ${tableSchema.simpleString}")
       enforceRequired(shaped, tableSchema)
-      val dataDir = new Path(root, "data")
-      val pre = listParquet(fs, dataDir).toSet
-      withFieldIdWrites(spark) {
-        val derived = carry.partFields.filterNot(_.isIdentity).foldLeft(
-          stampFieldIds(shaped, carry.schemaJson)) { (d, pf) =>
-          d.withColumn(pf.specName, IcebergTransforms.columnExpr(pf))
-        }
-        // cluster by partition columns: files = touched partitions,
-        // not tasks x partitions (see the append path)
-        val clustered = WriteLayout.clusterByPartitions(spark, derived, partCols)
-        val w = clustered.write.mode("append")
-        (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
-          .parquet(dataDir.toString)
-      }
-      val dataWithRows = sizeParquet(fs, root,
-        listParquet(fs, dataDir).filterNot(pre.contains))
-      require(dataWithRows.map(_._2).sum == nUpdated,
-        s"MOR update wrote ${dataWithRows.map(_._2).sum} new rows for " +
+      val dataWithRows = stageData(spark, fs, root, carry, shaped)
+      require(dataWithRows.map(_.rows).sum == nUpdated,
+        s"MOR update wrote ${dataWithRows.map(_.rows).sum} new rows for " +
           s"$nUpdated deleted positions — aborting before commit")
 
       dvStaged match {
@@ -1885,13 +1762,11 @@ object IcebergWrite {
       tableSchema: StructType, srcRows: Long): (Long, Long) = {
     import org.apache.spark.sql.functions._
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    val prev = readUtf8(fs, hint).trim.toInt
+    val prev = currentVersion(fs, tablePath)
     val version = prev + 1
     val root = fs.makeQualified(new Path(tablePath))
     val metaDir = new Path(root, "metadata")
     val carry = carryFromPrev(fs, metaDir, prev)
-    val partCols = carry.partCols
 
     // counts against the planned snapshot (one pass over the pruned
     // lineage view): updated = live rows a source key hits
@@ -1909,25 +1784,10 @@ object IcebergWrite {
       src.filter(nonNull).select(keys.map(col): _*), version, carry, tablePath)
 
     enforceRequired(src, tableSchema)
-    val dataDir = new Path(root, "data")
-    val pre = listParquet(fs, dataDir).toSet
-    val cols = tableSchema.fieldNames.map(col).toSeq
-    withFieldIdWrites(spark) {
-      val derived = carry.partFields.filterNot(_.isIdentity).foldLeft(
-        stampFieldIds(src.select(cols: _*), carry.schemaJson)) { (d, pf) =>
-        d.withColumn(pf.specName, IcebergTransforms.columnExpr(pf))
-      }
-      // cluster by partition columns: files = touched partitions,
-      // not tasks x partitions (see the append path)
-      val clustered = WriteLayout.clusterByPartitions(spark, derived, partCols)
-      val w = clustered.write.mode("append")
-      (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
-        .parquet(dataDir.toString)
-    }
-    val dataWithRows = sizeParquet(fs, root,
-      listParquet(fs, dataDir).filterNot(pre.contains))
-    require(dataWithRows.map(_._2).sum == srcRows,
-      s"MOR merge wrote ${dataWithRows.map(_._2).sum} rows for a " +
+    val dataWithRows = stageData(spark, fs, root, carry,
+      src.select(tableSchema.fieldNames.map(col).toSeq: _*))
+    require(dataWithRows.map(_.rows).sum == srcRows,
+      s"MOR merge wrote ${dataWithRows.map(_.rows).sum} rows for a " +
         s"$srcRows-row source — aborting before commit")
 
     // equality deletes reference KEYS, not files: commute with any
@@ -1944,26 +1804,26 @@ object IcebergWrite {
     (updated, inserted)
   }
 
-  /** parquet footer row counts + file sizes for a set of staged rels */
-  private def sizeParquet(fs: FileSystem, root: Path,
-      rels: Seq[String]): Seq[(String, Long, Long)] = {
-    val conf = fs.getConf
-    parMap(rels) { rel =>
-      val p = new Path(root, rel)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-      val rows = try r.getRecordCount finally r.close()
-      (rel, rows, fs.getFileStatus(p).getLen)
-    }.filter { case (rel, rows, _) =>
-      if (rows == 0L) fs.delete(new Path(root, rel), false)
-      rows > 0L
+  /** stage the merge-on-read row images: field ids stamped, transform
+    * partition values derived, clustered by partition columns (files =
+    * touched partitions, not tasks x partitions — see the append path) */
+  private def stageData(spark: SparkSession, fs: FileSystem, root: Path,
+      carry: SchemaCarry, rows: DataFrame): Seq[Staged] =
+    TableCommit.stage(fs, root, "data") { staging =>
+      val partCols = carry.partCols
+      val derived = carry.partFields.filterNot(_.isIdentity).foldLeft(
+        stampFieldIds(rows, carry.schemaJson)) { (d, pf) =>
+        d.withColumn(pf.specName, IcebergTransforms.columnExpr(pf))
+      }
+      val clustered = WriteLayout.clusterByPartitions(spark, derived, partCols)
+      val w = clustered.write.mode("append")
+      (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(staging)
     }
-  }
 
   /** ONE snapshot carrying a data manifest (ADDED files, seq = this
     * commit) plus up to one position-delete and one equality-delete
     * manifest at the same sequence number — the merge-on-read commit
-    * shape. OCC semantics delegate to [[commitDeleteWithRetry]]:
+    * shape. OCC semantics delegate to [[commitWithRetry]]:
     * assembly (manifests + list + metadata JSON) retries at successive
     * versions while the winner commutes; the staged parquet is reused
     * verbatim. */
@@ -1971,9 +1831,9 @@ object IcebergWrite {
       root: Path, metaDir: Path, tablePath: String, carry: SchemaCarry,
       plannedLive: Set[String], version: Int, operation: String,
       txn: Option[(String, Long)], tableSchema: StructType,
-      dataWithRows: Seq[(String, Long, Long)],
-      posDeletes: Seq[(String, Long, Long)],
-      eqDeletes: Option[(Seq[(String, Long, Long)], Seq[Int])],
+      dataWithRows: Seq[Staged],
+      posDeletes: Seq[Staged],
+      eqDeletes: Option[(Seq[Staged], Seq[Int])],
       fmtVersion: Int = 2): Unit = {
     require(dataWithRows.nonEmpty, "MOR commit with no data files")
     require(fmtVersion < 3 || posDeletes.isEmpty,
@@ -1988,23 +1848,22 @@ object IcebergWrite {
       // data manifest (v3: explicit sequential first_row_id per file)
       val dataRowIds: Seq[Option[Long]] =
         if (fmtVersion < 3) dataWithRows.map(_ => scala.None)
-        else dataWithRows.scanLeft(nextRowIdOf(fs, metaDir, v - 1)) {
-          case (acc, (_, rows, _)) => acc + rows
-        }.init.map(Some(_))
+        else dataWithRows.scanLeft(nextRowIdOf(fs, metaDir, v - 1))(_ + _.rows)
+          .init.map(Some(_))
       val dataRel = s"metadata/manifest-$v-${pathNonce()}.avro"
       writeAvro(fs, new Path(root, dataRel), entrySchema,
-        parMap(dataWithRows.zip(dataRowIds)) { case ((rel, rows, len), rowId) =>
+        dataWithRows.zip(dataRowIds).map { case (staged, rowId) =>
           val file = new GenericData.Record(dataFileSchema)
           file.put("content", 0)
-          file.put("file_path", rel)
+          file.put("file_path", staged.rel)
           file.put("file_format", "PARQUET")
           file.put("partition",
-            partitionRecordOf(dataFileSchema, recordFields, rel))
-          file.put("record_count", rows)
-          file.put("file_size_in_bytes", len)
+            partitionRecordOf(dataFileSchema, recordFields, staged.rel))
+          file.put("record_count", staged.rows)
+          file.put("file_size_in_bytes", staged.size)
           file.put("block_size_in_bytes", DefaultBlockSize)
           rowId.foreach(id => file.put("first_row_id", Long.box(id)))
-          attachStats(file, dataFileSchema, conf, new Path(root, rel), c.schemaJson)
+          attachStats(file, dataFileSchema, staged.footer, c.schemaJson)
           val entry = new GenericData.Record(entrySchema)
           entry.put("status", 1) // ADDED
           entry.put("snapshot_id", v.toLong)
@@ -2016,22 +1875,22 @@ object IcebergWrite {
         fs.getFileStatus(new Path(root, dataRel)).getLen, c.defaultSpecId,
         content = 0, seq = v.toLong, minSeq = v.toLong, snapshotId = v.toLong,
         addedFiles = dataWithRows.size, existingFiles = 0, deletedFiles = 0,
-        addedRows = dataWithRows.map(_._2).sum, existingRows = 0L,
+        addedRows = dataWithRows.map(_.rows).sum, existingRows = 0L,
         deletedRows = 0L)
 
       // position-delete manifest (partition-scoped entries)
       val posRef = if (posDeletes.isEmpty) scala.None else {
         val rel = s"metadata/manifest-$v-${pathNonce()}.avro"
         writeAvro(fs, new Path(root, rel), entrySchema,
-          posDeletes.map { case (r, rows, len) =>
+          posDeletes.map { d =>
             val file = new GenericData.Record(dataFileSchema)
             file.put("content", 1) // POSITION DELETES
-            file.put("file_path", r)
+            file.put("file_path", d.rel)
             file.put("file_format", "PARQUET")
             file.put("partition",
-              partitionRecordOf(dataFileSchema, recordFields, r))
-            file.put("record_count", rows)
-            file.put("file_size_in_bytes", len)
+              partitionRecordOf(dataFileSchema, recordFields, d.rel))
+            file.put("record_count", d.rows)
+            file.put("file_size_in_bytes", d.size)
             file.put("block_size_in_bytes", DefaultBlockSize)
             val entry = new GenericData.Record(entrySchema)
             entry.put("status", 1)
@@ -2043,7 +1902,7 @@ object IcebergWrite {
         Some(ManifestRef(rel, fs.getFileStatus(new Path(root, rel)).getLen, c.defaultSpecId,
           content = 1, seq = v.toLong, minSeq = v.toLong, snapshotId = v.toLong,
           addedFiles = posDeletes.size, existingFiles = 0, deletedFiles = 0,
-          addedRows = posDeletes.map(_._2).sum, existingRows = 0L,
+          addedRows = posDeletes.map(_.rows).sum, existingRows = 0L,
           deletedRows = 0L))
       }
 
@@ -2053,15 +1912,15 @@ object IcebergWrite {
         val globalSpecId = c.emptySpecId
         val gSchema = manifestSchema.getField("data_file").schema()
         writeAvro(fs, new Path(root, rel), manifestSchema,
-          dels.map { case (r, rows, len) =>
+          dels.map { d =>
             val file = new GenericData.Record(gSchema)
             file.put("content", 2) // EQUALITY DELETES
-            file.put("file_path", r)
+            file.put("file_path", d.rel)
             file.put("file_format", "PARQUET")
             file.put("partition",
               new GenericData.Record(gSchema.getField("partition").schema()))
-            file.put("record_count", rows)
-            file.put("file_size_in_bytes", len)
+            file.put("record_count", d.rows)
+            file.put("file_size_in_bytes", d.size)
             file.put("block_size_in_bytes", DefaultBlockSize)
             file.put("equality_ids", eqIds.map(Int.box).asJava)
             val entry = new GenericData.Record(manifestSchema)
@@ -2074,7 +1933,7 @@ object IcebergWrite {
         ManifestRef(rel, fs.getFileStatus(new Path(root, rel)).getLen,
           globalSpecId, content = 1, seq = v.toLong, minSeq = v.toLong,
           snapshotId = v.toLong, addedFiles = dels.size, existingFiles = 0,
-          deletedFiles = 0, addedRows = dels.map(_._2).sum,
+          deletedFiles = 0, addedRows = dels.map(_.rows).sum,
           existingRows = 0L, deletedRows = 0L)
       }
 
@@ -2085,10 +1944,10 @@ object IcebergWrite {
         manifestListMeta(v, fmtVersion))
       writeMetadataJson(fs, metaDir, root, v, fmtVersion,
         c, listRel, operation = operation, propsOverride = txnProps(txn),
-        assignedRows = if (fmtVersion < 3) 0L else dataWithRows.map(_._2).sum)
+        assignedRows = if (fmtVersion < 3) 0L else dataWithRows.map(_.rows).sum)
     }
-    commitDeleteWithRetry(spark, fs, root, metaDir, tablePath, carry,
-      plannedLive, version, assemble)
+    commitWithRetry(spark, fs, root, tablePath, operation, carry, version,
+      plannedLive)(assemble)
   }
 
   /** ROLLBACK: re-point `current-snapshot-id` at an earlier snapshot
@@ -2100,9 +1959,7 @@ object IcebergWrite {
     * file-name convention). */
   def rollback(spark: SparkSession, tablePath: String, snapshotId: Long): Unit = {
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
+    val prev = currentVersion(fs, tablePath)
     val version = prev + 1
     val root = fs.makeQualified(new Path(tablePath))
     val metaDir = new Path(root, "metadata")
@@ -2115,15 +1972,7 @@ object IcebergWrite {
       s"snapshot $snapshotId not found in $tablePath (have ${ids.mkString(",")})")
     node.put("current-snapshot-id", snapshotId)
     node.put("last-updated-ms", System.currentTimeMillis())
-    val metaPath = new Path(metaDir, s"v$version.metadata.json")
-    try writeUtf8(fs, metaPath, node.toString, overwrite = false)
-    catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent Iceberg commit detected: $metaPath already exists — " +
-            "another writer committed this version; re-read the table and retry", e)
-    }
-    writeUtf8(fs, new Path(metaDir, "version-hint.text"), version.toString)
+    publishMetadata(fs, metaDir, version, node.toString)
   }
 
   /** TAG a snapshot (the spec's `refs` map, type=tag): a named,
@@ -2154,9 +2003,7 @@ object IcebergWrite {
       branch: String, txn: Option[(String, Long)] = scala.None): Unit = {
     require(branch != "main", "'main' IS the table — use append")
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
+    val prev = currentVersion(fs, tablePath)
     // same schema guard as plain append — a branch must not drift
     val prevMeta = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(readUtf8(fs, new Path(tablePath, s"metadata/v$prev.metadata.json")))
@@ -2181,9 +2028,7 @@ object IcebergWrite {
     * later branch appends keep chaining from its head. */
   def fastForward(spark: SparkSession, tablePath: String, branch: String): Unit = {
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
+    val prev = currentVersion(fs, tablePath)
     val metaDir = new Path(fs.makeQualified(new Path(tablePath)), "metadata")
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = mapper.readTree(readUtf8(fs, new Path(metaDir, s"v$prev.metadata.json")))
@@ -2211,15 +2056,7 @@ object IcebergWrite {
     head.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
       .put("graft-base", head.get("snapshot-id").asLong())
     node.put("last-updated-ms", System.currentTimeMillis())
-    val metaPath = new Path(metaDir, s"v${prev + 1}.metadata.json")
-    try writeUtf8(fs, metaPath, node.toString, overwrite = false)
-    catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent Iceberg commit detected: $metaPath already exists — " +
-            "another writer committed this version; re-read the table and retry", e)
-    }
-    writeUtf8(fs, new Path(metaDir, "version-hint.text"), (prev + 1).toString)
+    publishMetadata(fs, metaDir, prev + 1, node.toString)
   }
 
   /** drop a named ref (tag); the snapshot itself stays until
@@ -2235,9 +2072,7 @@ object IcebergWrite {
              com.fasterxml.jackson.databind.node.ObjectNode,
              Seq[Long]) => Unit): Unit = {
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
+    val prev = currentVersion(fs, tablePath)
     val version = prev + 1
     val metaDir = new Path(fs.makeQualified(new Path(tablePath)), "metadata")
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -2251,15 +2086,7 @@ object IcebergWrite {
     edit(mapper, refs, snapIds)
     node.set[com.fasterxml.jackson.databind.JsonNode]("refs", refs)
     node.put("last-updated-ms", System.currentTimeMillis())
-    val metaPath = new Path(metaDir, s"v$version.metadata.json")
-    try writeUtf8(fs, metaPath, node.toString, overwrite = false)
-    catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent Iceberg commit detected: $metaPath already exists — " +
-            "another writer committed this version; re-read the table and retry", e)
-    }
-    writeUtf8(fs, new Path(metaDir, "version-hint.text"), version.toString)
+    publishMetadata(fs, metaDir, version, node.toString)
   }
 
   /** every path a snapshot pins: its manifest list, its manifests, and
@@ -2294,9 +2121,7 @@ object IcebergWrite {
       keepLast: Int = 1): (Int, Seq[String]) = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
+    val prev = currentVersion(fs, tablePath)
     val version = prev + 1
     val root = fs.makeQualified(new Path(tablePath))
     val metaDir = new Path(root, "metadata")
@@ -2336,15 +2161,7 @@ object IcebergWrite {
     kept.sortBy(_.get("snapshot-id").asLong()).foreach(keptArr.add)
     node.set("snapshots", keptArr)
     node.put("last-updated-ms", System.currentTimeMillis())
-    val metaPath = new Path(metaDir, s"v$version.metadata.json")
-    try writeUtf8(fs, metaPath, node.toString, overwrite = false)
-    catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent Iceberg commit detected: $metaPath already exists — " +
-            "another writer committed this version; re-read the table and retry", e)
-    }
-    writeUtf8(fs, new Path(metaDir, "version-hint.text"), version.toString)
+    publishMetadata(fs, metaDir, version, node.toString)
     doomed.foreach(p => fs.delete(new Path(p), false))
     (expired.size, doomed)
   }
@@ -2354,7 +2171,9 @@ object IcebergWrite {
     * `metadata/`, and every crashed-job `_temporary` attempt file that
     * NO snapshot in the current metadata references — crashed writes,
     * lost OCC attempts, abandoned staging — and returns them;
-    * `dryRun=false` also deletes them. DRY-RUN BY DEFAULT, and only
+    * `dryRun=false` also deletes them, plus crashed writers' stale
+    * `.staging-*` dirs ([[TableCommit.sweepStaleStaging]], the same
+    * age guard). DRY-RUN BY DEFAULT, and only
     * files older than `olderThanMs` (default 3 days, Iceberg's own
     * default) are candidates: an in-flight writer's staged-but-not-yet-
     * committed files (the append OCC path re-commits staged parquet
@@ -2371,9 +2190,7 @@ object IcebergWrite {
       dryRun: Boolean = true): Seq[String] = {
     require(olderThanMs >= 0, s"olderThanMs must be >= 0, got $olderThanMs")
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
+    val prev = currentVersion(fs, tablePath)
     val root = fs.makeQualified(new Path(tablePath))
     val metaDir = new Path(root, "metadata")
     val conf = spark.sparkContext.hadoopConfiguration
@@ -2404,7 +2221,10 @@ object IcebergWrite {
     val orphans =
       candidatesUnder(new Path(root, "data"), _.endsWith(".parquet")) ++
         candidatesUnder(metaDir, _.endsWith(".avro"))
-    if (!dryRun) orphans.foreach(p => fs.delete(new Path(p), false))
+    if (!dryRun) {
+      orphans.foreach(p => fs.delete(new Path(p), false))
+      TableCommit.sweepStaleStaging(fs, root, cutoff)
+    }
     orphans
   }
 
@@ -2428,10 +2248,9 @@ object IcebergWrite {
       "sequence-number" -> version.toString,
       "format-version" -> fmtVersion.toString)
 
-  /** shared metadata-JSON commit tail: versioned file created with
-    * overwrite=false — the conditional-commit guard (two writers racing
-    * to the same version fail loudly here, first creator wins; the
-    * version hint is just a hint and may overwrite). v2 metadata
+  /** shared metadata-JSON commit tail, published by
+    * [[publishMetadata]] (two writers racing to the same version fail
+    * loudly there, first creator wins). v2 metadata
     * additionally carries last-sequence-number / schemas /
     * partition-specs / sort-orders and a per-snapshot sequence-number
     * (= the version — one commit, one sequence). */
@@ -2543,15 +2362,7 @@ object IcebergWrite {
          |"timestamp-ms":$now,"summary":{"operation":${jstr(operation)}},
          |"manifest-list":${jstr(listRel)}}]}"""
         .stripMargin.replaceAll("\n", "")
-    val metaPath = new Path(metaDir, s"v$version.metadata.json")
-    try writeUtf8(fs, metaPath, meta, overwrite = false)
-    catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent Iceberg commit detected: $metaPath already exists — " +
-            "another writer committed this version; re-read the table and retry", e)
-    }
-    writeUtf8(fs, new Path(metaDir, "version-hint.text"), version.toString)
+    publishMetadata(fs, metaDir, version, meta)
   }
 
   /** the table's v3 row-id counter after version `prev` (0 before the
@@ -2815,16 +2626,10 @@ object IcebergWrite {
   def deleteWhere(spark: SparkSession, tablePath: String,
       cond: org.apache.spark.sql.Column): Long = {
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
+    val prev = currentVersion(fs, tablePath)
     val version = prev + 1
     val root = fs.makeQualified(new Path(tablePath))
-    val targetMeta = new Path(root, s"metadata/v$version.metadata.json")
-    if (fs.exists(targetMeta))
-      throw new java.util.ConcurrentModificationException(
-        s"concurrent Iceberg commit detected: $targetMeta already exists — " +
-          "another writer committed this version; re-read the table and retry")
+    requireFreeVersion(fs, root, version)
     // format-version 3 forbids parquet position-delete files: route to
     // the deletion-vector path
     if (prevFormatVersion(fs, new Path(root, "metadata"), prev) >= 3)
@@ -2851,23 +2656,23 @@ object IcebergWrite {
       .filter(cond).select(col("__raw_file"), col("__pos"))
     val delWithRows = stagePositionDeletes(spark, fs, root, tablePath,
       victims, version, recordFields)
-    val nDeleted = delWithRows.map(_._2).sum
-    if (nDeleted == 0L) return 0L // helper already cleaned its staging dir
+    val nDeleted = delWithRows.map(_.rows).sum
+    if (nDeleted == 0L) return 0L
     val conf = spark.sparkContext.hadoopConfiguration
 
     def assemble(v: Int, c: SchemaCarry): Unit = {
       val manifestRel = s"metadata/manifest-$v-${pathNonce()}.avro"
       val entrySchema = manifestSchemaFor(recordFields)
       val dataFileSchema = entrySchema.getField("data_file").schema()
-      val delEntries = delWithRows.map { case (rel, rows, len) =>
+      val delEntries = delWithRows.map { d =>
         val file = new GenericData.Record(dataFileSchema)
         file.put("content", 1) // POSITION DELETES
-        file.put("file_path", rel)
+        file.put("file_path", d.rel)
         file.put("file_format", "PARQUET")
         file.put("partition",
-          partitionRecordOf(dataFileSchema, recordFields, rel))
-        file.put("record_count", rows)
-        file.put("file_size_in_bytes", len)
+          partitionRecordOf(dataFileSchema, recordFields, d.rel))
+        file.put("record_count", d.rows)
+        file.put("file_size_in_bytes", d.size)
         file.put("block_size_in_bytes", DefaultBlockSize)
         val entry = new GenericData.Record(entrySchema)
         entry.put("status", 1) // ADDED
@@ -2895,28 +2700,24 @@ object IcebergWrite {
       writeMetadataJson(fs, metaDir, root, v, fmtVersion = 2,
         c, listRel, operation = "delete")
     }
-    // OCC retry: the staged delete files reference (file_path, pos) of
-    // the PLANNED snapshot's data files — a lost CAS re-validates that
-    // the winner (a) left schema + partition spec intact and (b)
-    // removed NO planned data file (a concurrent compact/rewrite would
-    // resurrect the deleted rows through the rewritten copies), then
-    // re-commits the same delete files at the next version. Pure
+    // the staged delete files reference (file_path, pos) of the PLANNED
+    // snapshot's data files, so every one must stay live. Pure
     // concurrent APPENDS commute: the delete's higher sequence number
     // applies it to pre-existing files only, and the staged positions
     // name exactly the files this plan saw.
-    commitDeleteWithRetry(spark, fs, root, metaDir, tablePath, carry,
-      dataFiles.toSet, version, assemble)
+    commitWithRetry(spark, fs, root, tablePath, "delete", carry, version,
+      dataFiles.toSet)(assemble)
     nDeleted
   }
 
   /** stage position-delete parquet files for `victims` (columns
     * `__raw_file`, `__pos` from the lineage view) under
-    * `data/deletes-v$version/`, returning (relPath, rows, bytes) per
-    * non-empty delete file. Shared by [[deleteWhere]] and the
-    * merge-on-read [[updateWhere]] path. */
+    * `data/deletes-v$version-<nonce>/`, returning the non-empty delete
+    * files. Shared by [[deleteWhere]] and the merge-on-read
+    * [[updateWhere]] path. */
   private def stagePositionDeletes(spark: SparkSession, fs: FileSystem,
       root: Path, tablePath: String, victims0: DataFrame, version: Int,
-      recordFields: Seq[StructField]): Seq[(String, Long, Long)] = {
+      recordFields: Seq[StructField]): Seq[Staged] = {
     val partCols = recordFields.map(_.name)
     import org.apache.spark.sql.functions.{broadcast, col}
     // the spec reserves parquet field ids for position-delete columns:
@@ -2928,13 +2729,12 @@ object IcebergWrite {
     val victims = victims0.select(col("__raw_file").as("file_path", fpMeta),
       col("__pos").as("pos", posMeta))
 
-    // delete files land in their own subdir (writing into data/
-    // itself would trip Spark's read-write-same-path guard); the nonce
-    // keeps two writers racing to the same version from overwriting
-    // each other's staged files — only the metadata CAS arbitrates
-    val delDir = new Path(root, s"data/deletes-v$version-${pathNonce()}")
-    withFieldIdWrites(spark) {
-      if (partCols.isEmpty)
+    // delete files land in their own subdir; the nonce keeps two writers
+    // racing to the same version from claiming the same names — only
+    // the metadata CAS arbitrates
+    val delDir = s"data/deletes-v$version-${pathNonce()}"
+    if (partCols.isEmpty)
+      TableCommit.stage(fs, root, delDir) { staging =>
         // hash-partition by victim FILE so a predicate delete touching
         // billions of rows never serializes through one task: each task
         // holds complete file groups (skew bounded by rows-per-data-file,
@@ -2945,40 +2745,42 @@ object IcebergWrite {
         // victim scan — for no better bound.
         victims.repartition(col("file_path"))
           .sortWithinPartitions("file_path", "pos")
-          .write.mode("overwrite").parquet(delDir.toString)
-      else {
-        // PARTITIONED: position deletes are partition-scoped by spec, so
-        // each touched partition gets its own delete file(s) in a hive
-        // directory mirroring the data layout. Partition values come
-        // from the live MANIFEST entries of the victim files (typed,
-        // layout-independent), joined in broadcast-size
-        val victimFiles = victims
-          .select(IcebergScan.normalizePathCol(col("file_path")).as("f"))
-          .distinct().collect().map(_.getString(0)) // [lint:bounded] live-data-file-count rows
-          .toSet
-        if (victimFiles.isEmpty) { fs.delete(delDir, true); return Seq.empty }
-        val (_, entries) = IcebergScan.currentEntries(spark, tablePath)
-        val hitEntries = entries.filter(e =>
-          e.content == 0 && victimFiles.contains(IcebergScan.normalizePath(e.path)))
-        require(hitEntries.size == victimFiles.size,
-          s"victim files ${victimFiles.size} != matched live entries " +
-            s"${hitEntries.size} — path namespace mismatch between the " +
-            "lineage view and the manifest")
-        val partFields = recordFields
-        val pmapSchema = StructType(
-          StructField("__file", StringType) +: partFields.map(_.copy(nullable = true)))
-        val pmapRows: java.util.List[org.apache.spark.sql.Row] = hitEntries.map { e =>
-          org.apache.spark.sql.Row.fromSeq(IcebergScan.normalizePath(e.path) +:
-            partFields.map { f =>
-              // a PRE-EVOLUTION victim (older spec) has no value for the
-              // current spec's fields — its deletes land in the NULL
-              // partition dir; application is by (file, pos), unaffected
-              if (e.partition.contains(f.name))
-                partitionExternal(f.dataType, e.partition(f.name))
-              else null
-            })
-        }.asJava
-        val pmap = spark.createDataFrame(pmapRows, pmapSchema)
+          .write.mode("overwrite").parquet(staging)
+      }
+    else {
+      // PARTITIONED: position deletes are partition-scoped by spec, so
+      // each touched partition gets its own delete file(s) in a hive
+      // directory mirroring the data layout. Partition values come
+      // from the live MANIFEST entries of the victim files (typed,
+      // layout-independent), joined in broadcast-size
+      val victimFiles = victims
+        .select(IcebergScan.normalizePathCol(col("file_path")).as("f"))
+        .distinct().collect().map(_.getString(0)) // [lint:bounded] live-data-file-count rows
+        .toSet
+      if (victimFiles.isEmpty) return Seq.empty
+      val (_, entries) = IcebergScan.currentEntries(spark, tablePath)
+      val hitEntries = entries.filter(e =>
+        e.content == 0 && victimFiles.contains(IcebergScan.normalizePath(e.path)))
+      require(hitEntries.size == victimFiles.size,
+        s"victim files ${victimFiles.size} != matched live entries " +
+          s"${hitEntries.size} — path namespace mismatch between the " +
+          "lineage view and the manifest")
+      val partFields = recordFields
+      val pmapSchema = StructType(
+        StructField("__file", StringType) +: partFields.map(_.copy(nullable = true)))
+      val pmapRows: java.util.List[org.apache.spark.sql.Row] = hitEntries.map { e =>
+        org.apache.spark.sql.Row.fromSeq(IcebergScan.normalizePath(e.path) +:
+          partFields.map { f =>
+            // a PRE-EVOLUTION victim (older spec) has no value for the
+            // current spec's fields — its deletes land in the NULL
+            // partition dir; application is by (file, pos), unaffected
+            if (e.partition.contains(f.name))
+              partitionExternal(f.dataType, e.partition(f.name))
+            else null
+          })
+      }.asJava
+      val pmap = spark.createDataFrame(pmapRows, pmapSchema)
+      TableCommit.stage(fs, root, delDir) { staging =>
         victims
           .withColumn("__file", IcebergScan.normalizePathCol(col("file_path")))
           .join(broadcast(pmap), Seq("__file"))
@@ -2986,56 +2788,7 @@ object IcebergWrite {
             col("pos").as("pos", posMeta) +: partCols.map(col): _*)
           .transform(d => WriteLayout.clusterByPartitions(spark, d, partCols)) // all rows of a partition in one task → one file per touched partition
           .sortWithinPartitions("file_path", "pos")
-          .write.partitionBy(partCols: _*).mode("overwrite").parquet(delDir.toString)
-      }
-    }
-    val conf = spark.sparkContext.hadoopConfiguration
-    val staged = listParquet(fs, delDir).map("data/" + _).map { rel =>
-      val p = new Path(root, rel)
-      val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-      val rows = try footer.getRecordCount finally footer.close()
-      (rel, rows, fs.getFileStatus(p).getLen)
-    }.filter(_._2 > 0L)
-    if (staged.isEmpty) fs.delete(delDir, true)
-    staged
-  }
-
-  /** shared OCC loop for delete commits (see [[deleteWhere]]): retry
-    * `assemble` at successive versions while the winner's commits
-    * commute; `plannedLive` empty skips the file-liveness check
-    * (equality deletes reference keys, not files). */
-  private def commitDeleteWithRetry(spark: SparkSession, fs: FileSystem,
-      root: Path, metaDir: Path, tablePath: String, carry: SchemaCarry,
-      plannedLive: Set[String], version: Int,
-      assemble: (Int, SchemaCarry) => Unit): Unit = {
-    beforeCommit()
-    var v = version
-    var c = carry
-    var attempt = 0
-    while (true) {
-      try { assemble(v, c); return }
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > MaxCommitRetries) throw e
-          val latest = readUtf8(fs,
-            new Path(root, "metadata/version-hint.text")).trim.toInt
-          val nc = carryFromPrev(fs, metaDir, latest)
-          if (nc.schemaJson != c.schemaJson || nc.specFieldsJson != c.specFieldsJson)
-            throw new java.util.ConcurrentModificationException(
-              s"delete lost the commit race at $tablePath and the winner " +
-                "changed the schema or partition spec — re-run the delete", e)
-          if (plannedLive.nonEmpty) {
-            val nowLive = IcebergScan.currentDataFiles(spark, tablePath)._2.toSet
-            if (!plannedLive.subsetOf(nowLive))
-              throw new java.util.ConcurrentModificationException(
-                s"delete lost the commit race at $tablePath and the winner " +
-                  "removed/rewrote data files this delete references — " +
-                  "re-run the delete on the current table state", e)
-          }
-          c = nc
-          v = latest + 1
+          .write.partitionBy(partCols: _*).mode("overwrite").parquet(staging)
       }
     }
   }
@@ -3060,7 +2813,7 @@ object IcebergWrite {
     * and the merge-on-read [[merge]] path. */
   private def stageEqualityDeletes(spark: SparkSession, fs: FileSystem,
       root: Path, keys: DataFrame, version: Int, carry: SchemaCarry,
-      tablePath: String): (Seq[(String, Long, Long)], Seq[Int]) = {
+      tablePath: String): (Seq[Staged], Seq[Int]) = {
     import org.apache.spark.sql.functions.col
     val schemaNode = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(carry.schemaJson)
@@ -3082,19 +2835,17 @@ object IcebergWrite {
         .putLong("parquet.field.id", idByName(f.name).toLong).build()
       col(f.name).as(f.name, m)
     }.toSeq
-    // nonce: racing writers must not overwrite each other's staged files
-    val delDir = new Path(root, s"data/eqdeletes-v$version-${pathNonce()}")
+    // nonce: racing writers must not claim each other's file names
     // distinct() already hash-partitions by the key columns, so each task
     // holds complete key groups and writes its own sorted delete file —
     // a giant key set (a CDC backfill) never funnels through one task;
     // AQE coalesces a small set back to a single file
-    withFieldIdWrites(spark) {
-      keys.select(keyCols: _*).distinct()
-        .sortWithinPartitions(keys.schema.fieldNames.map(col).toSeq: _*)
-        .write.mode("overwrite").parquet(delDir.toString)
+    val staged = TableCommit.stage(fs, root, s"data/eqdeletes-v$version-${pathNonce()}") {
+      staging =>
+        keys.select(keyCols: _*).distinct()
+          .sortWithinPartitions(keys.schema.fieldNames.map(col).toSeq: _*)
+          .write.mode("overwrite").parquet(staging)
     }
-    val staged = sizeParquet(fs, root, listParquet(fs, delDir).map("data/" + _))
-    if (staged.isEmpty) fs.delete(delDir, true)
     (staged, eqIds)
   }
 
@@ -3126,25 +2877,19 @@ object IcebergWrite {
   def deleteEqual(spark: SparkSession, tablePath: String, keys: DataFrame): Long = {
     import org.apache.spark.sql.functions.col
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
+    val prev = currentVersion(fs, tablePath)
     require(keys.schema.fields.nonEmpty, "deleteEqual needs at least one key column")
-    val prev = readUtf8(fs, hint).trim.toInt
     val version = prev + 1
     val root = fs.makeQualified(new Path(tablePath))
-    val targetMeta = new Path(root, s"metadata/v$version.metadata.json")
-    if (fs.exists(targetMeta))
-      throw new java.util.ConcurrentModificationException(
-        s"concurrent Iceberg commit detected: $targetMeta already exists — " +
-          "another writer committed this version; re-read the table and retry")
+    requireFreeVersion(fs, root, version)
 
     val metaDir = new Path(root, "metadata")
     val carry = carryFromPrev(fs, metaDir, prev)
     val (delWithRows, eqIds) =
       stageEqualityDeletes(spark, fs, root, keys, version, carry, tablePath)
     val conf = spark.sparkContext.hadoopConfiguration
-    val nKeys = delWithRows.map(_._2).sum
-    if (nKeys == 0L) return 0L // helper already cleaned its staging dir
+    val nKeys = delWithRows.map(_.rows).sum
+    if (nKeys == 0L) return 0L
     // a v1 table upgrades to v2 at its first delete (the version that
     // defines sequence numbers); a v3 table stays v3 (equality deletes
     // remain first-class in v3 — only parquet POSITION deletes are
@@ -3154,15 +2899,15 @@ object IcebergWrite {
     def assemble(v: Int, c: SchemaCarry): Unit = {
       val manifestRel = s"metadata/manifest-$v-${pathNonce()}.avro"
       val dataFileSchema = manifestSchema.getField("data_file").schema()
-      val delEntries = delWithRows.map { case (rel, rows, len) =>
+      val delEntries = delWithRows.map { d =>
         val file = new GenericData.Record(dataFileSchema)
         file.put("content", 2) // EQUALITY DELETES
-        file.put("file_path", rel)
+        file.put("file_path", d.rel)
         file.put("file_format", "PARQUET")
         file.put("partition",
           new GenericData.Record(dataFileSchema.getField("partition").schema()))
-        file.put("record_count", rows)
-        file.put("file_size_in_bytes", len)
+        file.put("record_count", d.rows)
+        file.put("file_size_in_bytes", d.size)
         file.put("block_size_in_bytes", DefaultBlockSize)
         file.put("equality_ids", eqIds.map(Int.box).asJava)
         val entry = new GenericData.Record(manifestSchema)
@@ -3199,8 +2944,7 @@ object IcebergWrite {
     // any winner that keeps the schema/spec (the delete's higher
     // sequence number applies it to every file the winner added or
     // rewrote, which IS the operation's read-time semantics)
-    commitDeleteWithRetry(spark, fs, root, metaDir, tablePath, carry,
-      plannedLive = Set.empty, version, assemble)
+    commitWithRetry(spark, fs, root, tablePath, "delete", carry, version)(assemble)
     nKeys
   }
 
@@ -3229,9 +2973,7 @@ object IcebergWrite {
     * backend (src/TidierDB.jl:209-212); this is superset depth. */
   def upgradeFormatVersion(spark: SparkSession, tablePath: String): Unit = {
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
+    val prev = currentVersion(fs, tablePath)
     val version = prev + 1
     val root = fs.makeQualified(new Path(tablePath))
     val metaDir = new Path(root, "metadata")
@@ -3374,7 +3116,7 @@ object IcebergWrite {
       dropParquetPos: Boolean,
       // a MOR UPDATE commits its re-written row images in the SAME
       // snapshot as the DVs that kill the originals
-      newData: Seq[(String, Long, Long)] = Seq.empty): Unit = {
+      newData: Seq[Staged] = Seq.empty): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val rootPrefix = root.toString.stripSuffix("/") + "/"
     def relOf(abs: String): String =
@@ -3489,22 +3231,20 @@ object IcebergWrite {
         val recordFields = c.partFields.map(_.recordField)
         val es = manifestSchemaFor(recordFields, v3 = true)
         val dfs = es.getField("data_file").schema()
-        val rowIds = newData.scanLeft(nextRowIdOf(fs, metaDir, v - 1)) {
-          case (acc, (_, rows, _)) => acc + rows
-        }.init
+        val rowIds = newData.scanLeft(nextRowIdOf(fs, metaDir, v - 1))(_ + _.rows).init
         val rel = s"metadata/manifest-$v-${pathNonce()}.avro"
         writeAvro(fs, new Path(root, rel), es,
-          parMap(newData.zip(rowIds)) { case ((r, rows, len), rowId) =>
+          newData.zip(rowIds).map { case (staged, rowId) =>
             val f = new GenericData.Record(dfs)
             f.put("content", 0)
-            f.put("file_path", r)
+            f.put("file_path", staged.rel)
             f.put("file_format", "PARQUET")
-            f.put("partition", partitionRecordOf(dfs, recordFields, r))
-            f.put("record_count", rows)
-            f.put("file_size_in_bytes", len)
+            f.put("partition", partitionRecordOf(dfs, recordFields, staged.rel))
+            f.put("record_count", staged.rows)
+            f.put("file_size_in_bytes", staged.size)
             f.put("block_size_in_bytes", DefaultBlockSize)
             f.put("first_row_id", Long.box(rowId))
-            attachStats(f, dfs, conf, new Path(root, r), c.schemaJson)
+            attachStats(f, dfs, staged.footer, c.schemaJson)
             val en = new GenericData.Record(es)
             en.put("status", 1) // ADDED
             en.put("snapshot_id", v.toLong)
@@ -3515,7 +3255,7 @@ object IcebergWrite {
         Some(ManifestRef(rel, fs.getFileStatus(new Path(root, rel)).getLen,
           c.defaultSpecId, content = 0, seq = v.toLong, minSeq = v.toLong,
           snapshotId = v.toLong, addedFiles = newData.size, existingFiles = 0,
-          deletedFiles = 0, addedRows = newData.map(_._2).sum,
+          deletedFiles = 0, addedRows = newData.map(_.rows).sum,
           existingRows = 0L, deletedRows = 0L))
       }
       val prevData = readPrevManifests(fs, conf, root, v).filter(_.content == 0)
@@ -3524,10 +3264,10 @@ object IcebergWrite {
         (prevData ++ dataRef.toSeq ++ refs) pipe (rs => listRecords(fs, conf, root, c, rs)),
         manifestListMeta(v, fmtVersion = 3))
       writeMetadataJson(fs, metaDir, root, v, fmtVersion = 3, c, listRel,
-        operation = operation, assignedRows = newData.map(_._2).sum)
+        operation = operation, assignedRows = newData.map(_.rows).sum)
     }
-    commitDeleteWithRetry(spark, fs, root, metaDir, tablePath, carry,
-      plannedLive, version, assemble)
+    commitWithRetry(spark, fs, root, tablePath, operation, carry, version,
+      plannedLive)(assemble)
   }
 
   /** Spark → Iceberg schema JSON with 1-based field ids; primitives
@@ -3727,26 +3467,6 @@ object IcebergWrite {
     arr
   }
 
-  /** bounded driver-side parallel map for per-file METADATA I/O
-    * (parquet footer reads): commit cost is O(added files), and a
-    * sequential footer walk is a single-core bottleneck once a
-    * partitioned write emits thousands of files — 16 concurrent
-    * footer reads cut the commit's metadata phase ~10x at high file
-    * counts. Order-preserving; exceptions propagate. */
-  private def parMap[A, B](xs: Seq[A])(f: A => B): Seq[B] =
-    if (xs.lengthCompare(8) < 0) xs.map(f)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
-      try {
-        val futs = xs.map { x =>
-          pool.submit(new java.util.concurrent.Callable[B] { def call(): B = f(x) })
-        }
-        futs.map(_.get())
-      } catch {
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
-      } finally pool.shutdown()
-    }
-
   // schemaJson → (field ids by name, Spark schema): parsed once per
   // schema, not once per FILE (attachStats runs per added file)
   private val statsSchemaCache =
@@ -3754,9 +3474,9 @@ object IcebergWrite {
 
   /** attach lower/upper bounds + null counts (from one parquet footer)
     * to a data_file record — column stats external planners and our
-    * own skippingFilter prune with. Thread-safe (used under [[parMap]]). */
+    * own skippingFilter prune with. */
   private def attachStats(file: GenericData.Record, dataFileSchema: Schema,
-      conf: org.apache.hadoop.conf.Configuration, dataPath: Path,
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
       schemaJson: String): Unit = {
     if (statsSchemaCache.size > 64) statsSchemaCache.clear()
     val (idByName, sparkSch) = statsSchemaCache.computeIfAbsent(schemaJson, { sj =>
@@ -3765,7 +3485,7 @@ object IcebergWrite {
         .map(f => f.get("name").asText() -> f.get("id").asInt()).toMap
       (ids, IcebergScan.sparkSchema(mapper.readTree(sj)))
     })
-    val (lo, hi, nulls) = IcebergStats.footerBounds(conf, dataPath, sparkSch, idByName)
+    val (lo, hi, nulls) = IcebergStats.footerBounds(footer, sparkSch, idByName)
     if (nulls.nonEmpty)
       file.put("null_value_counts", kvArray(dataFileSchema, "null_value_counts",
         nulls, (v: Long) => java.lang.Long.valueOf(v)))
@@ -3819,44 +3539,16 @@ object IcebergWrite {
     try records.foreach(writer.append) finally writer.close()
   }
 
-  private def readAvro(fs: FileSystem, conf: org.apache.hadoop.conf.Configuration,
-      path: Path): Seq[GenericRecord] = {
-    val in = new FsInput(path, conf)
-    val reader = DataFileReader.openReader(in, new GenericDatumReader[GenericRecord]())
-    try reader.iterator().asScala.toVector finally reader.close()
+  /** publish metadata version `version` and swap the version hint to
+    * it — the one place an Iceberg commit lands. The metadata JSON is
+    * the conditional CAS ([[TableCommit.publish]]: a taken slot is a
+    * lost race); the hint is an atomic-overwrite pointer, so no reader
+    * — the admission-controlled stream source in particular — can
+    * observe a torn control file. */
+  private[sources] def publishMetadata(fs: FileSystem, metaDir: Path,
+      version: Int, json: String): Unit = {
+    TableCommit.publish(fs, new Path(metaDir, s"v$version.metadata.json"), json, "Iceberg")
+    AtomicFiles.publishUtf8(fs, new Path(metaDir, "version-hint.text"),
+      version.toString, overwrite = true)
   }
-
-  private def listParquet(fs: FileSystem, dir: Path): Seq[String] = {
-    if (!fs.exists(dir)) return Seq.empty
-    val base = dir.getParent.toString.stripSuffix("/") + "/"
-    val out = Seq.newBuilder[String]
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val st = it.next()
-      val p = st.getPath.toString
-      if (p.startsWith(base) && p.endsWith(".parquet"))
-        out += p.substring(base.length)
-    }
-    out.result()
-  }
-
-  private[sources] def readUtf8(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-  }
-
-  // content-atomic ([[AtomicFiles]]): the metadata-json CAS
-  // (overwrite=false) and the version-hint swap (overwrite=true) are
-  // both rename-published, so no reader — the admission-controlled
-  // stream source in particular — can observe a torn control file
-  private[sources] def writeUtf8(fs: FileSystem, p: Path, s: String,
-      overwrite: Boolean = true): Unit =
-    AtomicFiles.publishUtf8(fs, p, s, overwrite)
-
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 }

@@ -20,6 +20,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * bounded by partition count, never by data size.
   */
 private[sources] object ShardedSink {
+  import TableCommit.jstr
 
   val ManifestName = "_manifest.json"
 
@@ -87,11 +88,4 @@ private[sources] object ShardedSink {
       parts
     }
   }
-
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 }

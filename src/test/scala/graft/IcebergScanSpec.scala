@@ -388,6 +388,12 @@ class IcebergScanSpec extends SparkSpec {
     // plus a stray manifest-looking avro (a lost OCC assembly attempt)
     val strayAvro = java.nio.file.Paths.get(dir, "metadata", "manifest-9-deadbeef.avro")
     java.nio.file.Files.write(strayAvro, Array[Byte](1, 2, 3))
+    // plus a writer that crashed mid-write long ago: its private staging
+    // dir is no orphan candidate, but the delete-mode sweep reclaims it
+    val staleStaging = java.nio.file.Paths.get(dir, ".staging-deadbeef0000")
+    java.nio.file.Files.createDirectories(staleStaging)
+    java.nio.file.Files.write(staleStaging.resolve("part-0.parquet"), Array[Byte](1))
+    assert(staleStaging.toFile.setLastModified(1000L))
 
     // fresh files are protected by the age guard (in-flight writers)
     assert(IcebergWrite.removeOrphanFiles(spark, dir).isEmpty,
@@ -399,12 +405,14 @@ class IcebergScanSpec extends SparkSpec {
       listed.count(_.endsWith(".parquet")) == 1, s"wrong orphan set: $listed")
     // ... and deletes nothing (dry-run default)
     assert(java.nio.file.Files.exists(strayAvro))
+    assert(java.nio.file.Files.exists(staleStaging))
 
     // delete mode reclaims them; the table reads unchanged
     val deleted = IcebergWrite.removeOrphanFiles(spark, dir,
       olderThanMs = 0L, dryRun = false)
     assert(deleted.toSet == listed.toSet)
     assert(!java.nio.file.Files.exists(strayAvro))
+    assert(!java.nio.file.Files.exists(staleStaging))
     assert(IcebergScan.read(spark, dir).collect().map(_.getLong(0)).toSet ==
       Set(1L, 2L, 3L))
     // idempotent: a second sweep finds nothing
@@ -1783,6 +1791,38 @@ class IcebergScanSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("concurrent Iceberg commit"))
     assert(java.nio.file.Files.readString(metaPath) == before)
+  }
+
+  test("appendWithRetry: two racing Iceberg writers interleave without loss or cross-claimed rows") {
+    import graft.sources.{IcebergScan, IcebergWrite}
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_ice_retry").toString
+    IcebergWrite.create(spark, Seq((-1L, "seed")).toDF("id", "v"), dir)
+    // two writers, five appends each, racing on metadata versions — every
+    // row must land exactly once (a writer's file set must never include
+    // the other writer's in-flight files)
+    val writers = (0 until 2).map { w =>
+      Future {
+        (0 until 5).foreach { i =>
+          IcebergWrite.appendWithRetry(spark,
+            Seq((w * 10L + i, s"w$w")).toDF("id", "v"), dir, maxRetries = 20)
+        }
+      }
+    }
+    writers.foreach(Await.result(_, 120.seconds))
+    val hint = java.nio.file.Paths.get(dir, "metadata", "version-hint.text")
+    assert(java.nio.file.Files.readString(hint).trim == "11") // create + 10 appends
+    val rows = IcebergScan.read(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getString(1)))
+    assert(rows.length == 11) // exactly once each — no dupes, no loss
+    assert(rows.map(_._1).toSet ==
+      (Set(-1L) ++ (0 until 5).map(_.toLong) ++ (0 until 5).map(_ + 10L)))
+    // no writer-private staging dir or shared Spark job-temp dir survives
+    assert(!new java.io.File(dir).listFiles().exists(_.getName.startsWith(".staging-")))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "data", "_temporary")))
   }
   import spark.implicits._
 
